@@ -110,10 +110,16 @@ def track_point_params(
         F.lead("lat", 1).over(w), F.lead("lon", 1).over(w),
     )
     seg_h = (F.lead(time_col, 1).over(w) - F.col(time_col)) * 6.0
-    v_trans = F.coalesce(seg_km * 1000.0 / (seg_h * H_TO_S), F.lit(0.0))
+    # try_divide: a repeated step (a drop landed twice) has zero
+    # duration — NULL, then 0.0 through the coalesce, as the DuckDB
+    # twin's `/` gives; ANSI `/` would fail the whole forecast
+    v_trans = F.coalesce(
+        F.try_divide(seg_km * 1000.0, seg_h * H_TO_S), F.lit(0.0)
+    )
     v_trans = F.least(v_trans, F.lit(VT_CAP_MS))
     dp_dt = F.coalesce(
-        (F.lag("pcen", 1).over(w) - F.col("pcen")) / dt_h, F.lit(0.0)
+        F.try_divide(F.lag("pcen", 1).over(w) - F.col("pcen"), dt_h),
+        F.lit(0.0),
     )
     out = (
         tracks.withColumn("v_trans_ms", v_trans)

@@ -96,6 +96,11 @@ _STALE_BEFORE_ROUND: dict[str, int] = {
     # hashed the old text. (It previously carried an r8 mark for the
     # same reason in the other direction.)
     "dedup_semdedup": 12,
+    # Round 14 wrapped the trigger ladder's probabilities and booleans
+    # in coalesce (0.0 / false with no damaged member); values on the
+    # catalog storm are unchanged, but the r13 rows hashed the old text.
+    "tc_trigger_ladder": 14,
+    "pipeline_triggers": 14,
 }
 
 

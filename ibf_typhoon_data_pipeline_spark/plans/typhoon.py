@@ -24,9 +24,10 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ibf_typhoon_data_pipeline_spark import pipeline as chain
 from ibf_typhoon_data_pipeline_spark.operators.interpolation import (
     resample_interpolate,
 )
@@ -283,106 +284,23 @@ def gen_munis(spark: SparkSession) -> DataFrame:
     )
 
 
-# K4 bbox guard (±deg box before the min-agg): any point OUTSIDE the
-# box is strictly farther than 111·K4_BBOX_DEG km in degree-space, so
-# an in-box minimum ≤ that bound IS the global minimum — the value is
-# exact, not approximate. Groups with no in-box pair (or an in-box min
-# above the bound, possible in the box corners) fall back to the
-# unconditioned join, resolved in-plan via left-anti (the P8 tier
-# pattern — no driver-side count). Bounds the muni × track-point pair
-# space at event-count scale while every emitted distance stays
-# bit-identical to the plain global min the oracles compute.
-K4_BBOX_DEG = 3.0
-
-
-def _k4_degree_dist() -> Column:
-    """K4's degree-space distance (reference quirk preserved) — one
-    shared Column so the boxed tier and the fallback tier evaluate the
-    token-identical expression (forecast_process.py:1563-1640)."""
-    return (
-        F.sqrt(
-            (F.col("m_lat") - F.col("lat")) * (F.col("m_lat") - F.col("lat"))
-            + (F.col("m_lon") - F.col("lon")) * (F.col("m_lon") - F.col("lon"))
-        )
-        * 111.0
-    )
-
-
-def _k4_min_dists(munis: DataFrame, tracks: DataFrame) -> DataFrame:
-    """Per-(muni, ens) global min track distance, bbox-pruned. `munis`
-    carries (adm3_pcode, m_lat, m_lon); `tracks` (ens_id, lat, lon)."""
-    boxed = munis.join(
-        F.broadcast(tracks),
-        (F.abs(F.col("m_lat") - F.col("lat")) <= K4_BBOX_DEG)
-        & (F.abs(F.col("m_lon") - F.col("lon")) <= K4_BBOX_DEG),
-    )
-    d_box = boxed.groupBy("adm3_pcode", "ens_id").agg(
-        F.min(_k4_degree_dist()).alias("dis_track_min")
-    )
-    safe = d_box.filter(F.col("dis_track_min") <= 111.0 * K4_BBOX_DEG)
-    # dims-only cross join: every (muni, ens) group that must exist
-    groups = munis.select("adm3_pcode").crossJoin(
-        tracks.select("ens_id").distinct()
-    )
-    rest = groups.join(
-        safe.select("adm3_pcode", "ens_id"), ["adm3_pcode", "ens_id"], "left_anti"
-    )
-    d_rest = (
-        rest.join(munis, "adm3_pcode")
-        .join(F.broadcast(tracks), "ens_id")
-        .groupBy("adm3_pcode", "ens_id")
-        .agg(F.min(_k4_degree_dist()).alias("dis_track_min"))
-    )
-    return safe.unionByName(d_rest)
+def _chain(
+    spark: SparkSession, tracks: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """(muni_hazard, damage) of ``tracks`` on the generated centroid grid
+    and municipalities: the pipeline's layers without its persists."""
+    cents = gen_centroids(spark)
+    munis = gen_munis(spark)
+    mh = chain.muni_hazard(tracks, chain.windfield(tracks, cents), cents, munis)
+    return mh, chain.damage(mh, munis)
 
 
 def _muni_hazard(spark: SparkSession) -> DataFrame:
-    """tracks →K1→ windfield →K2/J2/A1→ per-(muni, member) hazard +
-    K4 degree-space min distance (forecast_process.py:1563-1640)."""
-    tracks = gen_tracks(spark)
-    cents = gen_centroids(spark)
-    wf = windfield_expr(tracks, cents.select("centroid_id", "lat", "lon"))
-    hazard = (
-        wf.join(F.broadcast(cents.select("centroid_id", "adm3_pcode")), "centroid_id")
-        .groupBy("adm3_pcode", "ens_id")
-        .agg(
-            F.count("*").alias("value_count"),
-            F.max("wind_ms").alias("v_max"),
-        )
-    )
-    munis = gen_munis(spark)
-    dists = _k4_min_dists(
-        munis.select("adm3_pcode", "m_lat", "m_lon"),
-        tracks.select("ens_id", "lat", "lon"),
-    )
-    return hazard.join(dists, ["adm3_pcode", "ens_id"])
+    return _chain(spark, gen_tracks(spark))[0]
 
 
 def _damage(spark: SparkSession) -> DataFrame:
-    """Damage stub: cubic ramp of v_max over 25 m/s × housing units,
-    zeroed beyond the 300 km wind-damage radius (P12/F12 post-rules;
-    the ML booster slot K6 drops in here)."""
-    mh = _muni_hazard(spark)
-    munis = gen_munis(spark)
-    ramp = (F.col("v_max") - 25.0) / 40.0
-    dmg = (
-        F.when(F.col("dis_track_min") > 300.0, F.lit(0.0))
-        .when(
-            F.col("v_max") > 25.0,
-            F.col("housing_units") * F.least(F.lit(1.0), ramp * ramp * ramp),
-        )
-        .otherwise(F.lit(0.0))
-    )
-    return (
-        mh.join(F.broadcast(munis.select("adm3_pcode", "housing_units")), "adm3_pcode")
-        .select(
-            "adm3_pcode",
-            "ens_id",
-            "v_max",
-            "dis_track_min",
-            dmg.alias("damage_predicted"),
-        )
-    )
+    return _chain(spark, gen_tracks(spark))[1]
 
 
 # ------------------------------------------------------------------ queries
@@ -736,11 +654,8 @@ def tc_muni_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
         "of each municipality (forecast_process.py:529-535,1644-1653)",
 )
 def tc_prob_within_50km(spark: SparkSession, sf_dir: str) -> DataFrame:
-    mh = _muni_hazard(spark)
-    return mh.groupBy("adm3_pcode").agg(
-        F.round(
-            F.avg(F.when(F.col("dis_track_min") < 50.0, 1.0).otherwise(0.0)), 6
-        ).alias("prob_within_50km")
+    return chain.prob_within_50km(_muni_hazard(spark)).select(
+        "adm3_pcode", F.round("prob_within_50km", 6).alias("prob_within_50km")
     )
 
 
@@ -769,23 +684,23 @@ def tc_damage_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
 def trigger_ladder_oracle(alias_20k: str, alias_80k: str) -> str:
     """The DREF/CERF exceedance-ladder oracle, parameterized on the
     boolean aliases — shared by tc_trigger_ladder and the orchestrated
-    pipeline_triggers entry so the two cannot silently diverge."""
+    pipeline_triggers entry so the two cannot silently diverge. With no
+    member in ``damage`` the probabilities are 0.0 and the booleans
+    false, as in the pipeline's triggers layer."""
+    def p(t: str) -> str:
+        return f"avg(CASE WHEN total_damage > {t} THEN 1.0 ELSE 0.0 END)"
+
     return f"""
     {DAMAGE_SQL},
     totals AS (
       SELECT ens_id, sum(damage_predicted) AS total_damage
       FROM damage GROUP BY ens_id
     )
-    SELECT round(avg(CASE WHEN total_damage > 20000.0 THEN 1.0 ELSE 0.0 END), 6)
-             AS prob_gt_20k,
-           round(avg(CASE WHEN total_damage > 50000.0 THEN 1.0 ELSE 0.0 END), 6)
-             AS prob_gt_50k,
-           round(avg(CASE WHEN total_damage > 80000.0 THEN 1.0 ELSE 0.0 END), 6)
-             AS prob_gt_80k,
-           avg(CASE WHEN total_damage > 20000.0 THEN 1.0 ELSE 0.0 END) >= 0.5
-             AS {alias_20k},
-           avg(CASE WHEN total_damage > 80000.0 THEN 1.0 ELSE 0.0 END) >= 0.5
-             AS {alias_80k}
+    SELECT round(coalesce({p("20000.0")}, CAST(0.0 AS DOUBLE)), 6) AS prob_gt_20k,
+           round(coalesce({p("50000.0")}, CAST(0.0 AS DOUBLE)), 6) AS prob_gt_50k,
+           round(coalesce({p("80000.0")}, CAST(0.0 AS DOUBLE)), 6) AS prob_gt_80k,
+           coalesce({p("20000.0")} >= 0.5, false) AS {alias_20k},
+           coalesce({p("80000.0")} >= 0.5, false) AS {alias_80k}
     FROM totals
     """
 
@@ -798,19 +713,11 @@ def trigger_ladder_oracle(alias_20k: str, alias_80k: str) -> str:
         "(forecast_process.py:1262-1303, settings.py:61-145)",
 )
 def tc_trigger_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _damage(spark)
-    totals = d.groupBy("ens_id").agg(
-        F.sum("damage_predicted").alias("total_damage")
-    )
-    def prob(t: float):
-        return F.avg(F.when(F.col("total_damage") > t, 1.0).otherwise(0.0))
-
-    return totals.agg(
-        F.round(prob(20000.0), 6).alias("prob_gt_20k"),
-        F.round(prob(50000.0), 6).alias("prob_gt_50k"),
-        F.round(prob(80000.0), 6).alias("prob_gt_80k"),
-        (prob(20000.0) >= 0.5).alias("dref_triggered"),
-        (prob(80000.0) >= 0.5).alias("cerf_triggered"),
+    probs = ("prob_gt_20k", "prob_gt_50k", "prob_gt_80k")
+    return chain.triggers(_damage(spark)).select(
+        *[F.round(c, 6).alias(c) for c in probs],
+        F.col("triggered_20k").alias("dref_triggered"),
+        F.col("triggered_80k").alias("cerf_triggered"),
     )
 
 
@@ -840,35 +747,14 @@ def tc_trigger_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
              ']') AS exposure_json
     FROM per_muni WHERE amount > 0 GROUP BY 1
     """,
-    doc="A9 dedup-keep-last + A3 ensemble mean + F19 exposure JSON "
-        "document per region (forecast_process.py:544,986-995,"
-        "1160-1233) — collect_list(struct)+to_json replaces iterrows",
+    doc="A9 dedup-keep-last (a no-op on the chain's damage layer, "
+        "already one row per muni and member) + A3 ensemble mean + "
+        "F19 exposure JSON document per region (forecast_process.py:"
+        "544,986-995,1160-1233) — collect_list(struct)+to_json "
+        "replaces iterrows",
 )
 def tc_exposure_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _damage(spark)
-    w = Window.partitionBy("adm3_pcode", "ens_id").orderBy(
-        F.col("damage_predicted").desc(), F.col("v_max").desc()
-    )
-    kept = d.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-    per_muni = kept.groupBy("adm3_pcode").agg(
-        F.round(F.avg("damage_predicted"), 0).cast("bigint").alias("amount")
-    )
-    return (
-        per_muni.filter(F.col("amount") > 0)
-        .groupBy(F.substring("adm3_pcode", 1, 4).alias("region"))
-        .agg(
-            F.to_json(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col("adm3_pcode").alias("placeCode"),
-                            F.col("amount").alias("amount"),
-                        )
-                    )
-                )
-            ).alias("exposure_json")
-        )
-    )
+    return chain.exposure_docs(_damage(spark))
 
 
 @register(
@@ -1654,14 +1540,16 @@ def tc_hindcast_triggers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------ §3.1 full DAG, multi-event batch
 # The reference runs its operational DAG once per active typhoon in a
 # driver loop (forecast_process.py:296-334 iterates Activetyphoon);
-# here THREE concurrent storms run the FULL production chain — track
+# here THREE concurrent storms run the production chain — track
 # params → Holland windfield (grid-pruned) → J2 muni hazard → K4 min
-# track distance → damage stub → per-event EAP trigger — as ONE Spark
-# plan with event_id as a partition axis. Unlike tc_hindcast_triggers
-# (simplified Willoughby outer profile, vmax-only tracks), this is the
-# same kernel chain the single-event flagship uses, so at 100 TB an
-# archived multi-event replay is this exact plan with more event_ids —
-# no driver loop, no per-event job submission.
+# track distance → damage stub, the layers of pipeline.py keyed on
+# (event_id, ens_id) because the track table carries event_id — then
+# a per-event EAP trigger, as ONE Spark plan with event_id as a
+# partition axis. Unlike tc_hindcast_triggers (simplified Willoughby
+# outer profile, vmax-only tracks), the entry holds no copy of the
+# chain, so at 100 TB an archived multi-event replay is this exact
+# plan with more event_ids — no driver loop, no per-event job
+# submission.
 N_EVENTS_DAG = 3
 
 TRACKS3_SQL = f"""
@@ -1819,69 +1707,16 @@ def gen_tracks_events(spark: SparkSession) -> DataFrame:
     """,
     doc="§3.1 operational DAG for THREE concurrent storms in ONE plan "
         "(forecast_process.py:296-334 loops per event on the driver): "
-        "full Holland kernel chain — track params → grid-pruned "
-        "windfield → muni hazard → K4 min distance → damage stub → "
-        "per-event EAP activation/readiness member counts. event_id "
+        "pipeline.py's layers keyed on (event_id, ens_id) — track "
+        "params → grid-pruned windfield → muni hazard → K4 min "
+        "distance → damage stub — then per-event EAP "
+        "activation/readiness member counts. event_id "
         "is a partition axis, not a job loop; damage totals are "
         "floor-quantized to integer units per row so the member "
         "trigger comparison is association-free in both engines",
 )
 def tc_multi_event_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tracks = gen_tracks_events(spark)
-    cents = gen_centroids(spark)
-    keys = ["event_id", "ens_id"]
-    wf = windfield_expr(
-        tracks, cents.select("centroid_id", "lat", "lon"), keys=keys
-    )
-    hazard = (
-        wf.join(
-            F.broadcast(cents.select("centroid_id", "adm3_pcode")),
-            "centroid_id",
-        )
-        .groupBy("event_id", "ens_id", "adm3_pcode")
-        .agg(F.max("wind_ms").alias("v_max"))
-    )
-    munis = gen_munis(spark)
-    # K4 degree-space min distance, per (event, muni, member) — the
-    # plain cross-join min (513 munis × 6.4k track points; both sides
-    # bounded by construction, the track side broadcast)
-    dist = (
-        F.sqrt(
-            (F.col("m_lat") - F.col("lat"))
-            * (F.col("m_lat") - F.col("lat"))
-            + (F.col("m_lon") - F.col("lon"))
-            * (F.col("m_lon") - F.col("lon"))
-        )
-        * 111.0
-    )
-    dists = (
-        munis.select("adm3_pcode", "m_lat", "m_lon")
-        .crossJoin(
-            F.broadcast(tracks.select("event_id", "ens_id", "lat", "lon"))
-        )
-        .groupBy("event_id", "adm3_pcode", "ens_id")
-        .agg(F.min(dist).alias("dis_track_min"))
-    )
-    ramp = (F.col("v_max") - 25.0) / 40.0
-    dmg = (
-        F.when(F.col("dis_track_min") > 300.0, F.lit(0.0))
-        .when(
-            F.col("v_max") > 25.0,
-            F.col("housing_units")
-            * F.least(F.lit(1.0), ramp * ramp * ramp),
-        )
-        .otherwise(F.lit(0.0))
-    )
-    damage = (
-        hazard.join(dists, ["event_id", "adm3_pcode", "ens_id"])
-        .join(
-            F.broadcast(munis.select("adm3_pcode", "housing_units")),
-            "adm3_pcode",
-        )
-        .select(
-            "event_id", "ens_id", "v_max", dmg.alias("damage_predicted")
-        )
-    )
+    damage = _chain(spark, gen_tracks_events(spark))[1]
     totals = damage.groupBy("event_id", "ens_id").agg(
         F.sum(
             F.floor(F.col("damage_predicted") + 0.5).cast("bigint")
@@ -2470,11 +2305,8 @@ def tc_damage_xgb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------- publish payloads
-# The upload frame the reference assembles per event
-# (forecast_process.py:1150-1233): municipality aggregates of the
-# ensemble, then one exposure document per indicator layer. Amount
-# transforms follow the reference exactly where it has them
-# (houses_affected = round(0.01·x, 2), prob round 2, int() elsewhere).
+# Oracle twin of pipeline.publish_payloads: the same body text, built
+# with DuckDB's ordered string_agg.
 _UPLOAD_SQL = """
   SELECT adm3_pcode,
          avg(damage_predicted) AS avg_dmg,
@@ -2484,64 +2316,6 @@ _UPLOAD_SQL = """
   FROM damage GROUP BY adm3_pcode
 """
 
-_PUBLISH_LAYERS = [
-    ("windspeed", "CAST(CAST(round(avg_vmax) AS BIGINT) AS STRING)"),
-    ("prob_within_50km", "CAST(round(prob50, 2) AS STRING)"),
-    ("houses_affected", "CAST(round(0.01 * avg_dmg, 2) AS STRING)"),
-    (
-        "affected_population",
-        "CAST(CAST(round(avg_dmg * 4.6) AS BIGINT) AS STRING)",
-    ),
-    (
-        "show_admin_area",
-        "CAST(CASE WHEN avg_dmg > 0.0 THEN 1 ELSE 0 END AS STRING)",
-    ),
-    (
-        "forecast_severity",
-        "CAST(CASE WHEN avg_dmg >= 500.0 THEN 2 "
-        "WHEN avg_dmg >= 80.0 THEN 1 ELSE 0 END AS STRING)",
-    ),
-    (
-        "forecast_trigger",
-        "CAST(CASE WHEN avg_dmg >= 80.0 AND prob50 >= 0.6 "
-        "THEN 1 ELSE 0 END AS STRING)",
-    ),
-]
-
-_BODY_PREFIX = '\'{"countryCodeISO3":"PHL","exposurePlaceCodes":[\''
-_ENTRY = (
-    "concat('{\"placeCode\":\"', adm3_pcode, '\",\"amount\":', %s, '}')"
-)
-
-
-def _body_suffix(layer: str) -> str:
-    return (
-        "'],\"adminLevel\":3,\"leadTime\":\"72-hour\","
-        f"\"dynamicIndicator\":\"{layer}\",\"disasterType\":\"typhoon\","
-        "\"eventName\":\"synthetic-storm\"}'"
-    )
-
-
-def _publish_body_duck(layer: str, amount_sql: str) -> str:
-    entry = _ENTRY % amount_sql
-    return (
-        f"concat({_BODY_PREFIX}, "
-        f"string_agg({entry}, ',' ORDER BY adm3_pcode), "
-        f"{_body_suffix(layer)})"
-    )
-
-
-def _publish_body_spark(layer: str, amount_sql: str) -> str:
-    # same strings, Spark's sorted-aggregate idiom: the entry text is
-    # prefix-ordered by the fixed-width pcode, so array_sort ≡ the
-    # oracle's ORDER BY adm3_pcode
-    entry = _ENTRY % amount_sql
-    return (
-        f"concat({_BODY_PREFIX}, "
-        f"concat_ws(',', array_sort(collect_list({entry}))), "
-        f"{_body_suffix(layer)})"
-    )
-
 
 @register(
     "pipeline_publish",
@@ -2550,13 +2324,14 @@ def _publish_body_spark(layer: str, amount_sql: str) -> str:
     upload AS ({_UPLOAD_SQL}),
     bodies AS (SELECT
       {", ".join(
-          f"{_publish_body_duck(layer, amt)} AS body_{i}"
-          for i, (layer, amt) in enumerate(_PUBLISH_LAYERS)
+          chain.publish_body_sql(layer, amt, "string_agg({}, ',' ORDER BY adm3_pcode)")
+          + f" AS body_{i}"
+          for i, (layer, amt) in enumerate(chain.PUBLISH_LAYERS)
       )}
       FROM upload)
     {" UNION ALL ".join(
         f"SELECT '{layer}' AS dynamicIndicator, body_{i} AS body_json FROM bodies"
-        for i, (layer, _) in enumerate(_PUBLISH_LAYERS)
+        for i, (layer, _) in enumerate(chain.PUBLISH_LAYERS)
     )}
     """,
     doc="S8 payload assembly: the per-indicator exposure documents the "
@@ -2567,30 +2342,7 @@ def _publish_body_spark(layer: str, amount_sql: str) -> str:
         "collected rows with the dynamicDataDb auth/retry contract",
 )
 def pipeline_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _damage(spark)
-    upload = d.groupBy("adm3_pcode").agg(
-        F.avg("damage_predicted").alias("avg_dmg"),
-        F.expr(
-            "avg(CASE WHEN dis_track_min < 50.0 THEN CAST(1.0 AS DOUBLE)"
-            " ELSE CAST(0.0 AS DOUBLE) END)"
-        ).alias("prob50"),
-        F.avg("v_max").alias("avg_vmax"),
-    )
-    bodies = upload.agg(
-        *[
-            F.expr(_publish_body_spark(layer, amt)).alias(f"body_{i}")
-            for i, (layer, amt) in enumerate(_PUBLISH_LAYERS)
-        ]
-    )
-    stack_args = ", ".join(
-        f"'{layer}', body_{i}" for i, (layer, _) in enumerate(_PUBLISH_LAYERS)
-    )
-    return bodies.selectExpr(
-        f"stack({len(_PUBLISH_LAYERS)}, {stack_args})"
-        " AS (dynamicIndicator, body_json)"
-    )
-
-
+    return chain.publish_payloads(_damage(spark))
 
 
 # ------------------------------------------------------- landfall ladder (K7)

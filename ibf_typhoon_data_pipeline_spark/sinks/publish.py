@@ -251,10 +251,13 @@ def replay_mock_event(
     through the real publish path. The trigger scenario posts the full
     indicator set from the assembled payload frame; the non-trigger
     scenario posts the no-event subset with zeroed documents
-    (uploadTyphoonData_no_event), then events/process closes out."""
-    from ibf_typhoon_data_pipeline_spark.plans import QUERIES
+    (uploadTyphoonData_no_event), then events/process closes out. The
+    canned scenario is the forecast chain on the generated storm;
+    ``sf_dir`` is not read."""
+    from ibf_typhoon_data_pipeline_spark.pipeline import publish_payloads
+    from ibf_typhoon_data_pipeline_spark.plans.typhoon import _damage
 
-    payloads = QUERIES["pipeline_publish"].fn(spark, sf_dir)
+    payloads = publish_payloads(_damage(spark))
     if not trigger:
         from pyspark.sql import functions as F
 

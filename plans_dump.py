@@ -1,14 +1,15 @@
 #!/usr/bin/env python
-"""Dump .explain('formatted') for headline queries into plans/r13/.
+"""Dump .explain('formatted') for headline queries into plans/r<N>/.
 
-Usage: python plans_r13_dump.py before|after [name ...]
+Usage: python plans_dump.py --round N before|after [name ...]
 With no names, dumps every bench.py HEADLINE entry. Output file:
-plans/r13/<query>_<tag>.txt (the optimization-round deliverable: the
-judge checks plan claims in OPTIMIZATION_r12.md against these files).
+plans/r<N>/<query>_<tag>.txt (the optimization-round deliverable: plan
+claims in OPTIMIZATION_r<N>.md are checked against these files).
 """
 
 from __future__ import annotations
 
+import argparse
 import io
 import os
 import sys
@@ -20,8 +21,12 @@ from bench import HEADLINE  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or HEADLINE
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--round", type=int, required=True)
+    ap.add_argument("tag", nargs="?", default="before")
+    ap.add_argument("names", nargs="*")
+    args = ap.parse_args()
+    names = args.names or HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -32,7 +37,7 @@ def main() -> None:
     spark = get_spark("ibf-plan-dump", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
 
-    out_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r13")
+    out_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", f"r{args.round}")
     os.makedirs(out_dir, exist_ok=True)
 
     for name in names:
@@ -45,7 +50,7 @@ def main() -> None:
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
-            path = os.path.join(out_dir, f"{name}_{tag}.txt")
+            path = os.path.join(out_dir, f"{name}_{args.tag}.txt")
             with open(path, "w") as f:
                 f.write(buf.getvalue())
             print(f"OK {name} -> {path}")

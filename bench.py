@@ -167,8 +167,9 @@ HEADLINE = [
     # 66 -> 68; compare totals on the shared 66 or per-query.
     "text_lm_logprob_capped",
     "scan_amplified_case_block",
-    # capacity-path SemDeDup (centroid-table HOF assignment)
-    "dedup_semdedup_scaled",
+    # (dedup_semdedup_scaled is not timed: it runs the same
+    # _semdedup_capacity_plan as dedup_semdedup. Round 14: n_queries
+    # 72 -> 71; compare totals on the shared 71 or per-query.)
     # round-12: the unclamped centroid-table IVF twins join the clock
     # (at sf0.1's 2k vectors the capacity rule resolves to k=8 — the
     # headline row times the plan shape; the past-the-knee evidence
@@ -182,6 +183,12 @@ HEADLINE = [
 ]
 
 N_SESSIONS = 3
+# the headline configuration: only a run at this core count (with the
+# load gate passed) may rewrite BENCH_FLOORS.json
+DEFAULT_CPUS = "32"
+# a tail capture keeps the last ~2,000 chars of output; the compact
+# line must fit with room for the newline and any capture framing
+COMPACT_BUDGET = 1985
 
 
 def _steal_sample() -> tuple[int, int] | None:
@@ -213,37 +220,74 @@ def _steal_pct(before, after) -> float | None:
     return round(100.0 * (after[0] - before[0]) / dt, 2) if dt > 0 else None
 
 
-def run_chunk(names: list[str], sf_dir: str, cpus: str) -> dict[str, float]:
-    """One fresh-JVM measurement session over a subset of HEADLINE."""
-    from ibf_typhoon_data_pipeline_spark import plans
-    from ibf_typhoon_data_pipeline_spark.session import get_spark
+def session(app: str, sf_dir: str):
+    """A warmed local[$SPARK_GRAFT_CPUS] session at log level ERROR.
 
-    steal_before = _steal_sample()
-    spark = get_spark("ibf-bench", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # warm the JVM + parquet footers of every table family once so
-    # per-query numbers measure the plans, not first-touch costs
-    from ibf_typhoon_data_pipeline_spark.sources.tables import load_table
-
-    plans.QUERIES["q1_pricing_summary"].fn(spark, sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    for t in ("documents", "embeddings", "events", "orders", "customer"):
-        load_table(spark, sf_dir, t).count()
-    # ...and the Arrow/Python worker pool: the first pandas-UDF stage
-    # of a session pays worker spin-up (~1-2 s) that a long-lived
-    # cluster never sees per-query; one trivial batch absorbs it
+    The warm-up pays the first-touch costs once so per-query numbers
+    measure the plans: JVM + codegen (one q1 run), the parquet footers
+    of every table family, and the Arrow/Python worker pool — the
+    first pandas-UDF stage of a session pays worker spin-up (~1-2 s)
+    that a long-lived cluster never sees per-query; one trivial batch
+    absorbs it."""
     from pyspark.sql import functions as F
     from pyspark.sql.pandas.functions import pandas_udf
+
+    from ibf_typhoon_data_pipeline_spark import plans
+    from ibf_typhoon_data_pipeline_spark.session import get_spark
+    from ibf_typhoon_data_pipeline_spark.sources.tables import load_table
+
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS)
+    spark = get_spark(app, master=f"local[{cpus}]")
+    spark.sparkContext.setLogLevel("ERROR")
+    noop_seconds(spark, plans.QUERIES["q1_pricing_summary"].fn, sf_dir)
+    for t in ("documents", "embeddings", "events", "orders", "customer"):
+        load_table(spark, sf_dir, t).count()
 
     @pandas_udf("double")
     def _warm(s):
         return s * 1.0
 
     spark.range(64).select(_warm(F.col("id").cast("double"))).count()
+    return spark
 
+
+def noop_seconds(spark, fn, sf_dir: str) -> float:
+    """Wall seconds of one full materialization of ``fn(spark, sf_dir)``,
+    then ``release_caches()`` (orchestration path: reclaim tracked
+    persists, so the next run re-executes the whole plan).
+
+    The noop sink forces every output row JVM-side. count() is NOT a
+    faithful probe — Catalyst eliminates left joins with unique right
+    keys and prunes expensive projections under it (graph_bfs_hops
+    measured 2.7 s by count vs ~23 s real before its fix; JSON-build
+    and kernel projections would be skipped entirely)."""
     from ibf_typhoon_data_pipeline_spark.operators.cache import release_caches
+
+    t0 = time.perf_counter()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    dt = time.perf_counter() - t0
+    release_caches()
+    return dt
+
+
+def reset(spark) -> None:
+    """Drop cached data and force one JVM GC. Spark's ContextCleaner
+    frees stale broadcast/shuffle state only when a JVM GC collects the
+    weak references — a 16g-heap local session rarely GCs on its own,
+    so dead state from ~18 predecessor queries piled up and inflated
+    late entries 4-5× (sim_ivf_topk recorded 7.7 s in-chunk vs 1.5 s
+    fresh, round 5). One explicit GC per query restores fresh-session
+    numbers for the whole chunk (verified A/B 2026-08-15)."""
+    spark.catalog.clearCache()
+    spark.sparkContext._jvm.System.gc()
+
+
+def run_chunk(names: list[str], sf_dir: str) -> dict[str, float]:
+    """One fresh-JVM measurement session over a subset of HEADLINE."""
+    steal_before = _steal_sample()
+    spark = session("ibf-bench", sf_dir)
+
+    from ibf_typhoon_data_pipeline_spark import plans
     from ibf_typhoon_data_pipeline_spark.operators.bench_probe import (
         latency_probe_seconds,
         probe_seconds,
@@ -284,30 +328,10 @@ def run_chunk(names: list[str], sf_dir: str, cpus: str) -> dict[str, float]:
             len(attempts) == 2
             and max(attempts) > 1.5 * min(attempts)
         ):
-            t0 = time.perf_counter()
-            # noop sink: full materialization of every output row
-            # JVM-side. count() is NOT a faithful probe — Catalyst
-            # eliminates left joins with unique right keys and prunes
-            # expensive projections under it (graph_bfs_hops measured
-            # 2.7 s by count vs ~23 s real before its fix; JSON-build
-            # and kernel projections would be skipped entirely).
-            qd.fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            attempts.append(time.perf_counter() - t0)
-            release_caches()  # orchestration path: reclaim tracked persists
-        best = min(attempts)
+            attempts.append(noop_seconds(spark, qd.fn, sf_dir))
         attempts_map[name] = [round(a, 3) for a in attempts]
-        # Spark's ContextCleaner frees stale broadcast/shuffle state
-        # only when a JVM GC collects the weak references — a 16g-heap
-        # local session rarely GCs on its own, so dead state from ~18
-        # predecessor queries piled up and inflated late entries 4-5×
-        # (sim_ivf_topk recorded 7.7 s in-chunk vs 1.5 s fresh, round
-        # 5). One explicit GC per query restores fresh-session numbers
-        # for the whole chunk (verified A/B 2026-08-15).
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-        timings[name] = round(best, 3)
+        reset(spark)
+        timings[name] = round(min(attempts), 3)
     # machine-speed calibration (operators/bench_probe.py): recorded so
     # round-over-round total comparisons can separate machine weather
     # (~1.4x session swings) from plan regressions without re-timing.
@@ -367,16 +391,60 @@ def wait_for_idle(
     return True
 
 
+def compact_line(summary: dict, timings: dict[str, float]) -> str:
+    """Tail-readable per-query floors (VERDICT r12 item 1/2): PERF's
+    per-query comparison needs a "queries" dict INSIDE the ~2,000-char
+    tail, which the full first line never fits. metric/value/unit/sf +
+    the per-query bests at 2dp, minimal separators (~1.95 KB at 71
+    entries); past COMPACT_BUDGET, precision degrades to 1dp, then 0dp,
+    then the dict is dropped, so the line always parses."""
+    head = {
+        "metric": summary["metric"],
+        "value": summary["value"],
+        "unit": "sec",
+        "sf": summary["sf"],
+    }
+    for ndp in (2, 1, None):  # round(t, None) is an int: "12", not "12.0"
+        line = json.dumps(
+            {**head, "queries": {n: round(t, ndp) for n, t in timings.items()}},
+            separators=(",", ":"),
+        )
+        if len(line) <= COMPACT_BUDGET:
+            return line
+    return json.dumps(head, separators=(",", ":"))
+
+
+def write_floors(payload: dict, path: str) -> None:
+    """Write the full-fidelity artifact (VERDICT r12 item 1): per-query
+    floors, attempts, normalized values and weather telemetry for a
+    reader of files, not tails. Only a headline-config run writes it
+    (cpus == DEFAULT_CPUS, load gate passed), so a low-core or loaded
+    run never replaces the headline floors; a skipped or failed write
+    says so on stderr. Nothing reads it back into any query path."""
+    name = os.path.basename(path)
+    if payload["cpus"] != DEFAULT_CPUS or payload["load_gate_waived"]:
+        sys.stderr.write(
+            f"bench: {name} not written (cpus={payload['cpus']}, "
+            f"load_gate_waived={payload['load_gate_waived']}); only a "
+            f"{DEFAULT_CPUS}-core run that passed the load gate "
+            "records headline floors\n"
+        )
+        return
+    try:
+        with open(path, "w") as f:
+            json.dump(payload, f, indent=1)
+    except OSError as e:
+        sys.stderr.write(f"bench: {name} not written: {e}\n")
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS)
 
     if len(sys.argv) > 2 and sys.argv[1] == "--chunk":
         # child mode: measure one subset, emit one JSON line
         names = [n for n in sys.argv[2].split(",") if n]
-        print(
-            "BENCH_CHUNK:" + json.dumps(run_chunk(names, sf_dir, cpus))
-        )
+        print("BENCH_CHUNK:" + json.dumps(run_chunk(names, sf_dir)))
         return
 
     # load-shadow gate (VERDICT r8 item 2): a run launched while other
@@ -473,9 +541,10 @@ def main() -> None:
         if steals
         else None,
     }
-    print(json.dumps({**summary, "queries": timings,
-                      "queries_normalized": normalized,
-                      "queries_attempts": attempts_all}))
+    full = {**summary, "queries": timings,
+            "queries_normalized": normalized,
+            "queries_attempts": attempts_all}
+    print(json.dumps(full))
     # truncation-proof twin (VERDICT r8 item 2): the driver keeps only
     # the last ~2,000 chars of output, and with 60+ queries x 2 dicts
     # the leading "value" key of the line above scrolls out (r8's
@@ -485,43 +554,12 @@ def main() -> None:
     # compact line below — the committed BENCH_FLOORS.json artifact
     # keeps everything).
     print(json.dumps(summary))
-    # driver-readable per-query floors (VERDICT r12 item 1/2): PERF's
-    # per-query comparison needs a "queries" dict INSIDE the ~2,000-
-    # char tail, which the full first line never fits. Emit a compact
-    # contract-shaped final line — metric/value/unit/sf + the per-
-    # query bests at 2dp, minimal separators (~1.99 KB at 72 entries).
-    # If the dict ever outgrows the tail budget, degrade precision
-    # rather than parseability.
-    for ndp in (2, 1):
-        compact = json.dumps(
-            {
-                "metric": summary["metric"],
-                "value": summary["value"],
-                "unit": "sec",
-                "sf": summary["sf"],
-                "queries": {n: round(t, ndp) for n, t in timings.items()},
-            },
-            separators=(",", ":"),
-        )
-        if len(compact) <= 1985:
-            break
-    print(compact)
-    # full-fidelity committed artifact (VERDICT r12 item 1): every
-    # run overwrites BENCH_FLOORS.json beside the repo so the judge
-    # (who reads files, not tails) gets per-query floors, attempts,
-    # normalized values and weather telemetry regardless of capture
-    # limits. A measurement record, not a result cache — nothing
-    # reads it back into any query path.
-    try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "BENCH_FLOORS.json"), "w"
-        ) as f:
-            json.dump({**summary, "queries": timings,
-                       "queries_normalized": normalized,
-                       "queries_attempts": attempts_all}, f, indent=1)
-    except OSError:
-        pass
+    print(compact_line(summary, timings))
+    write_floors(
+        {**full, "cpus": cpus},
+        os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                     "BENCH_FLOORS.json"),
+    )
 
 
 if __name__ == "__main__":

@@ -21,9 +21,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from bench import noop_seconds, reset, session, wait_for_idle  # noqa: E402
 
 FAMILIES = [
     "q1_pricing_summary",
@@ -194,45 +195,29 @@ GEN_AMP = 10
 GEN_SUPERLINEAR_AT = 12.0
 
 
+def _best_of_two(spark, fn, sf_dir: str) -> float:
+    """Best of two noop-sink runs, then one cache drop + GC (the
+    bench.py per-query protocol)."""
+    best = min(noop_seconds(spark, fn, sf_dir) for _ in range(2))
+    reset(spark)
+    return round(best, 3)
+
+
 def main() -> None:
     # same load-shadow protocol as bench.py (a run launched while
     # other JVMs drain reads ~1.4x slow across the board — and the
     # data tier's scaleup ratios would quietly absorb the skew of
     # load landing on one leg only)
-    from bench import wait_for_idle
-
     wait_for_idle()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     from ibf_typhoon_data_pipeline_spark import plans
-    from ibf_typhoon_data_pipeline_spark.operators.cache import (
-        release_caches,
-    )
-    from ibf_typhoon_data_pipeline_spark.session import get_spark
 
-    spark = get_spark("ibf-scaling", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
-    # warm the JVM + python workers once
-    plans.QUERIES["q1_pricing_summary"].fn(spark, SFS[0]).write.format(
-        "noop"
-    ).mode("overwrite").save()
+    spark = session("ibf-scaling", SFS[0])
     out: dict[str, dict] = {}
     for name in FAMILIES:
         qd = plans.QUERIES.get(name)
         if qd is None:
             continue
-        times = []
-        for sf_dir in SFS:
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                qd.fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.perf_counter() - t0)
-                release_caches()
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
-            times.append(round(best, 3))
+        times = [_best_of_two(spark, qd.fn, sf_dir) for sf_dir in SFS]
         out[name] = {
             "sf0.01_s": times[0],
             "sf0.1_s": times[1],
@@ -254,19 +239,10 @@ def main() -> None:
         tier: dict[str, dict] = {}
         for name in names:
             fn = plans.QUERIES[name].fn
-            times = []
-            for sf_dir in (SFS[1], f"{SFS[1]}@x{amp}"):
-                best = float("inf")
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    fn(spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    best = min(best, time.perf_counter() - t0)
-                    release_caches()
-                spark.catalog.clearCache()
-                spark.sparkContext._jvm.System.gc()
-                times.append(round(best, 3))
+            times = [
+                _best_of_two(spark, fn, sf_dir)
+                for sf_dir in (SFS[1], f"{SFS[1]}@x{amp}")
+            ]
             scaleup = round(times[1] / max(times[0], 1e-9), 2)
             tier[name] = {
                 "sf0.1_s": times[0],
@@ -290,30 +266,29 @@ def main() -> None:
     # the second leg scales the generated ensemble instead of the
     # tables (see GEN_TIER comment). The constant is restored in a
     # finally so a failed leg can't leak a 10x generator into
-    # anything that runs after.
+    # anything that runs after. Each leg also counts the generated
+    # tracks: a scaleup is only recorded when the amplified leg really
+    # generated GEN_AMP times the rows (ADVICE r13 #3).
     from ibf_typhoon_data_pipeline_spark.plans import typhoon as _ty
 
     gen_tier: dict[str, dict] = {}
+    base_members = _ty.N_MEMBERS
     for name in GEN_TIER:
         fn = plans.QUERIES[name].fn
-        times = []
-        base_members = _ty.N_MEMBERS
+        times, tracks = [], []
         for members in (base_members, base_members * GEN_AMP):
-            best = float("inf")
             try:
                 _ty.N_MEMBERS = members
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    fn(spark, SFS[1]).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    best = min(best, time.perf_counter() - t0)
-                    release_caches()
+                tracks.append(_ty.gen_tracks(spark).count())
+                times.append(_best_of_two(spark, fn, SFS[1]))
             finally:
                 _ty.N_MEMBERS = base_members
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
-            times.append(round(best, 3))
+        if tracks[1] != GEN_AMP * tracks[0]:
+            raise RuntimeError(
+                f"{name}: member-axis leg generated {tracks[1]} track rows,"
+                f" not {GEN_AMP} x {tracks[0]} — N_MEMBERS is no longer"
+                " read at call time, so the tier would time 1x twice"
+            )
         scaleup = round(times[1] / max(times[0], 1e-9), 2)
         gen_tier[name] = {
             "members_s": times[0],

@@ -1,5 +1,5 @@
 """Join operators (SURVEY.md §2.3): complete-pairs cross join,
-bbox-bounded nearest-neighbor join, semi/anti membership.
+semi/anti membership.
 
 Join-strategy policy (SURVEY §2.3 note): every dimension table in the
 domain is ≤~50k rows → broadcast-hash; only the fact-side joins
@@ -10,10 +10,8 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ibf_typhoon_data_pipeline_spark.functions.geo import haversine_km
 
 
 def complete_pairs(
@@ -36,53 +34,6 @@ def complete_pairs(
     spine = left.crossJoin(right)
     out = spine.join(df, [left_key, *right_keys], "left")
     return out.na.fill(fill)
-
-
-def nearest_neighbor_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_key: str,
-    max_deg: float | None = None,
-    lat: str = "lat",
-    lon: str = "lon",
-    suffix: str = "_nn",
-) -> DataFrame:
-    """J11 k=1 nearest-neighbor in space (forecast_process.py:691-734):
-    for each left row, the right row minimizing haversine distance.
-
-    The reference is an O(n·m) python double loop; here it's a
-    broadcast theta-join bounded by a bbox predicate (the anti-
-    cartesian guard, SURVEY §4 X1) + min-by. ``max_deg`` bounds the
-    search window; at 100 TB the bbox predicate is what keeps the pair
-    space linear instead of quadratic.
-    """
-    r = right.select(
-        *[F.col(c).alias(c + suffix) for c in right.columns]
-    )
-    cond = F.lit(True)
-    if max_deg is not None:
-        cond = (
-            (F.col(lat) - F.col(lat + suffix)).between(-max_deg, max_deg)
-            & (F.col(lon) - F.col(lon + suffix)).between(-max_deg, max_deg)
-        )
-    pairs = left.join(F.broadcast(r), cond)
-    dist = haversine_km(
-        F.col(lat), F.col(lon), F.col(lat + suffix), F.col(lon + suffix)
-    )
-    pairs = pairs.withColumn("nn_dist_km", dist)
-    # min_by keeps it a single aggregate instead of a window sort.
-    others = [c for c in pairs.columns if c not in left.columns]
-    return (
-        pairs.groupBy(*left.columns)
-        .agg(
-            F.min("nn_dist_km").alias("nn_dist_km"),
-            *[
-                F.expr(f"min_by(`{c}`, nn_dist_km)").alias(c)
-                for c in others
-                if c != "nn_dist_km"
-            ],
-        )
-    )
 
 
 def semi_membership(

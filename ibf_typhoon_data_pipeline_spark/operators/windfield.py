@@ -10,34 +10,37 @@ equations).
 
 Two interchangeable physical strategies:
 
-1. ``windfield_expr`` — the Spark-first path: per-track-point scalars
+1. Column expressions — the Spark-first path: per-track-point scalars
    (translation speed from lead(), pressure tendency from lag(), b_s,
-   RMW estimate) as window + scalar expressions, then a broadcast
-   theta-join of track points × centroids bounded by the bbox
-   predicate (the anti-cartesian guard, SURVEY §4 X1), then the radial
-   profile as pure `F.*` math. Everything stays in whole-stage
-   codegen; it is also DuckDB-expressible, so the correctness gate
-   covers the physics.
+   RMW estimate) as window + scalar expressions, then the one pair
+   join ``grid_prune_pairs`` (the anti-cartesian bbox guard, SURVEY §4
+   X1), then the radial profile as pure `F.*` math behind an
+   ``explode(array(wind))`` fence. ``windfield_expr`` (Holland),
+   ``windfield_willoughby``, ``windfield_vectors`` and
+   ``windfield_willoughby_blend`` — and the windfield entries in
+   plans/typhoon.py — all take their pairs from it. Everything stays
+   in whole-stage codegen; it is also DuckDB-expressible, so the
+   correctness gate covers the physics.
 
-2. ``windfield_kernel`` — the same formulas vectorized in numpy under
-   ``applyInPandas`` over (ens_id) groups, centroids broadcast —
-   the shape the reference's per-track process pool takes on Spark
-   (X4: repartition replaces pathos). Used to cross-check the expr
-   path and as the template for kernels that genuinely can't be
-   expressions (cubic splines, XGBoost inference).
+2. ``windfield_kernel`` — the Holland formulas vectorized in numpy
+   under ``applyInPandas`` over (ens_id) groups — the shape the
+   reference's per-track process pool takes on Spark (X4: repartition
+   replaces pathos). Used to cross-check the expr path and as the
+   template for kernels that genuinely can't be expressions (cubic
+   splines, XGBoost inference).
 
 Scale notes: the pair space is |track points| × |centroids within the
-per-point wind extent|. The default grid strategy equi-joins on
-2°-cell keys (track points exploded to the cells their prune box
-touches, each centroid hashed to one cell) with the exact bbox AND a
-per-point dynamic box — derived from the bisected threshold-crossing
-radius of the profile — as the residual condition, so pruning is a
-hash probe and the Holland expression runs only near the storm; track
-sides are tiny (52 members × ~40-480 points, ≤ a few cell copies
-each) and always broadcast. Output is the long skinny
-``windfield(ens_id, step, centroid_id, wind_ms)`` — relational
-sparsity replaces the reference's CSR matrix (rows below the 17.5 m/s
-threshold are dropped, mirroring eliminate_zeros at
+per-point wind extent|. ``grid_prune_pairs`` equi-joins on 2°-cell
+keys (track points exploded to the cells their prune box touches,
+each centroid hashed to one cell) with the exact bbox AND a per-point
+dynamic box — from a conservative threshold-crossing radius of the
+profile: bisected for Holland, closed-form for Willoughby — as the
+residual condition, so pruning is a hash probe and the profile runs
+only near the storm; track sides are tiny (52 members × ~40-480
+points, ≤ a few cell copies each) and always broadcast. Output is the
+long skinny ``windfield(ens_id, step, centroid_id, wind_ms)`` —
+relational sparsity replaces the reference's CSR matrix (rows below
+the 17.5 m/s threshold are dropped, mirroring eliminate_zeros at
 trop_cyclone.py:409-413).
 """
 
@@ -167,30 +170,21 @@ WIND_EXTENT_CAP_KM = 871.0
 # equirect 111.12, minus small-angle sin slack) — dividing r_hi by it
 # can only INFLATE the prune box, never shrink it below the true extent
 KM_PER_DEG_LB = 111.0
+GRID_CELL_DEG = 2.0     # edge of the hash-join grid cells
 
 
 def _wind_extent_kernel(rmw, b_s, penv, pcen, vt, lat, thr=V_THRESHOLD_MS):
-    """Vectorized numpy twin of ``holland_wind_ms`` bisected for the
-    radius where the profile crosses V_THRESHOLD_MS. v_total is
-    monotone decreasing beyond rmw (dv_g/dr = a'/(2s) + c'(c/s − 1)
-    with a' ≤ 0, c ≤ s, and the attenuated translation term decreasing
-    too), so every r > r_hi is strictly below threshold and pruning
-    those pairs cannot change the output. The +2 km margin dwarfs any
-    numpy↔JVM libm ulp disagreement near the crossing."""
+    """``_holland_np`` bisected for the radius where the profile
+    crosses ``thr``. v_total is monotone decreasing beyond rmw (dv_g/dr
+    = a'/(2s) + c'(c/s − 1) with a' ≤ 0, c ≤ s, and the attenuated
+    translation term decreasing too), so every r > r_hi is strictly
+    below threshold and pruning those pairs cannot change the output.
+    The +2 km margin dwarfs any numpy↔JVM libm ulp disagreement near
+    the crossing."""
     import numpy as np
 
-    dp_pa = np.maximum(penv - pcen, 1.0) * 100.0
-
     def v_total(r):
-        r_c = np.maximum(r, 1.0)
-        x_b = (rmw / r_c) ** b_s
-        rf2 = r_c * 1000.0 * np.abs(
-            2.0 * CORIOLIS_OMEGA * np.sin(np.radians(lat))
-        ) / 2.0
-        v_g = np.sqrt(
-            b_s / RHO_AIR * x_b * dp_pa * np.exp(1.0 - x_b) + rf2 * rf2
-        ) - rf2
-        return np.maximum(v_g + vt * np.minimum(1.0, rmw / r_c), 0.0)
+        return _holland_np(r, rmw, b_s, penv, pcen, lat, vt)
 
     lo = rmw.astype("float64").copy()
     hi = np.full(len(rmw), WIND_EXTENT_CAP_KM)
@@ -209,72 +203,64 @@ def _wind_extent_kernel(rmw, b_s, penv, pcen, vt, lat, thr=V_THRESHOLD_MS):
     return r_hi + 2.0
 
 
-def _willoughby_extent_kernel(vmax, lat, thr=V_THRESHOLD_MS):
-    """Threshold-crossing radius of the reduced Willoughby profile
-    (numpy twin of ``willoughby_wind_ms``). The outer branch is a
-    convex combination of two decaying exponentials scaled by Vmax —
-    strictly decreasing whenever X1 > 0 and A ∈ [0, 1); out-of-range
-    fits (hypothetical Vmax beyond the published regression's domain)
-    fall back to the full cap, i.e. no pruning."""
-    import numpy as np
-
-    alat = np.abs(lat)
-    rmax = 46.6 * np.exp(-0.0155 * vmax + 0.0169 * alat)
-    x1 = 317.1 - 2.026 * vmax + 1.915 * alat
-    a = np.maximum(0.0696 + 0.0049 * vmax - 0.0064 * alat, 0.0)
-
-    def v_outer(r):
-        d = r - rmax
-        return vmax * ((1.0 - a) * np.exp(-d / np.where(x1 > 0, x1, 1.0))
-                       + a * np.exp(-d / 25.0))
-
-    lo = rmax.astype("float64").copy()
-    hi = np.full(len(lo), WIND_EXTENT_CAP_KM)
-    for _ in range(40):
-        mid = 0.5 * (lo + hi)
-        above = v_outer(mid) > thr
-        lo = np.where(above, mid, lo)
-        hi = np.where(above, hi, mid)
-    r_hi = np.where(
-        vmax <= thr,
-        0.0,
-        np.where(
-            v_outer(np.full(len(lo), WIND_EXTENT_CAP_KM)) > thr,
-            WIND_EXTENT_CAP_KM,
-            hi,
-        ),
-    )
-    unsafe = (x1 <= 0.0) | (a >= 1.0)
-    return np.where(unsafe, WIND_EXTENT_CAP_KM, r_hi) + 2.0
-
-
-def _extent_col(kernel, *cols: str) -> Column:
-    """Arrow-batched column: ``kernel`` over the named numeric columns
-    → per-row prune radius in km. Applied only to broadcast-sized
-    track frames."""
+def holland_extent_km(threshold_ms: float) -> Column:
+    """Per-track-point prune radius of the Holland profile: the
+    bisection above as an Arrow-batched column over the track frame's
+    (rmw_km, b_s, penv, pcen, v_trans_ms, t_lat). Applied only to
+    broadcast-sized track frames."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
     def _extent(*series):
         import pandas as pd
 
-        return pd.Series(kernel(*[s.to_numpy() for s in series]))
+        return pd.Series(
+            _wind_extent_kernel(*[s.to_numpy() for s in series], thr=threshold_ms)
+        )
 
-    return _extent(*cols)
+    return _extent("rmw_km", "b_s", "penv", "pcen", "v_trans_ms", "t_lat")
+
+
+def willoughby_extent_km(vmax: Column, lat: Column, thr: float | Column) -> Column:
+    """Closed-form prune radius of the Willoughby outer profile
+    Vmax·((1−A)·e^{−(r−Rmax)/X1} + A·e^{−(r−Rmax)/25}). Beyond Rmax
+    both exponentials are ≤ e^{−(r−Rmax)/max(X1, 25)}, so the profile
+    is ≤ thr once r ≥ Rmax + max(X1, 25)·ln(Vmax/thr) — for every
+    A ∈ [0, 1), the A = 0 hindcast profile included; inside Rmax it
+    never exceeds Vmax. The +2 km margin dwarfs any ulp disagreement
+    near the crossing. Vmax ≤ thr gives 0 (nothing crosses); X1 ≤ 0 or
+    A ≥ 1 (Vmax beyond the published regression's domain) gives the
+    cap, i.e. the plain ±DEG_BOX box."""
+    alat = F.abs(lat)
+    rmax = 46.6 * F.exp(-0.0155 * vmax + 0.0169 * alat)
+    x1 = 317.1 - 2.026 * vmax + 1.915 * alat
+    a = 0.0696 + 0.0049 * vmax - 0.0064 * alat
+    return (
+        F.when((x1 <= 0.0) | (a >= 1.0), F.lit(WIND_EXTENT_CAP_KM))
+        .when(vmax <= thr, F.lit(0.0))
+        .otherwise(
+            rmax + F.greatest(x1, F.lit(25.0)) * F.log(vmax / thr) + 2.0
+        )
+    )
 
 
 def grid_prune_pairs(
-    c: DataFrame, t: DataFrame, cond: Column, r_hi: Column,
-    cell: float = 2.0, broadcast: bool = True,
+    t: DataFrame, centroids: DataFrame, r_hi: Column, broadcast: bool = True,
 ) -> DataFrame:
-    """(centroid × track-point) candidate pairs via a grid-cell HASH
-    join bounded by a per-track-point prune radius.
+    """(centroid × track-point) candidate pairs — the one windfield
+    pair join (SURVEY §4 X1). ``t`` carries t_lat/t_lon and the
+    per-point columns its profile needs; ``centroids`` carries lat/lon
+    (projected to c_lat/c_lon) plus whatever other columns the caller
+    selected. Every pair keeps the bbox predicate c BETWEEN t±DEG_BOX
+    (written that way, not c−t BETWEEN ±box, so the oracle SQL
+    evaluates the bit-identical float comparison).
 
     ``r_hi`` is a conservative wind-extent radius (km): every pair
     farther apart than r_hi must be below the output threshold, so the
     dynamic box drops ONLY rows the threshold filter would drop and
-    the surviving pairs are identical to the plain bbox theta-join
-    (``cond`` stays as part of the residual condition).
+    the surviving pairs are identical to the plain bbox theta-join.
+    A profile without an extent bound passes WIND_EXTENT_CAP_KM, which
+    gives exactly the ±DEG_BOX box.
 
     Geometry: dist ≥ KM_PER_DEG_LB·|Δlat| and ≥
     KM_PER_DEG_LB·cos(φ̄)·|Δlon| for both supported metrics; φ̄ is
@@ -285,7 +271,22 @@ def grid_prune_pairs(
     never miss a box-passing centroid. Track rows stay broadcast (≤ a
     few cell copies × a few 10⁴ rows); the equi part becomes the hash
     key and the pair space is Σ per-cell products instead of |C|×|T|.
+
+    The fence every caller puts on its profile: select the wind as
+    ``F.explode(F.array(wind))`` before filtering on the threshold.
+    Catalyst rewrites a filter through deterministic projects by alias
+    substitution and re-derives it below via constraint propagation,
+    so without a barrier the threshold lands in the JOIN CONDITION
+    with the whole profile inlined and evaluated per raw candidate
+    pair without common-subexpression elimination (windfield_vectors
+    measured 34 s vs 4 s). A row-preserving generator is a barrier
+    Catalyst cannot substitute through: the profile runs exactly once
+    per surviving pair and the join condition stays the cheap box.
     """
+    c = centroids.select(*[
+        F.col(x).alias(f"c_{x}") if x in ("lat", "lon") else F.col(x)
+        for x in centroids.columns
+    ])
     t = t.withColumn("__r_hi", r_hi)
     box_lat = F.least(F.lit(DEG_BOX), F.col("__r_hi") / KM_PER_DEG_LB)
     t = t.withColumn("__box_lat", box_lat).withColumn(
@@ -309,7 +310,8 @@ def grid_prune_pairs(
 
     def _cells(col: Column, box: Column) -> Column:
         return F.sequence(
-            F.floor((col - box) / cell), F.floor((col + box) / cell)
+            F.floor((col - box) / GRID_CELL_DEG),
+            F.floor((col + box) / GRID_CELL_DEG),
         )
 
     tg = (
@@ -321,8 +323,13 @@ def grid_prune_pairs(
         )
     )
     cg = c.withColumn(
-        "__c_latc", F.floor(F.col("c_lat") / cell)
-    ).withColumn("__c_lonc", F.floor(F.col("c_lon") / cell))
+        "__c_latc", F.floor(F.col("c_lat") / GRID_CELL_DEG)
+    ).withColumn("__c_lonc", F.floor(F.col("c_lon") / GRID_CELL_DEG))
+    bbox = F.col("c_lat").between(
+        F.col("t_lat") - DEG_BOX, F.col("t_lat") + DEG_BOX
+    ) & F.col("c_lon").between(
+        F.col("t_lon") - DEG_BOX, F.col("t_lon") + DEG_BOX
+    )
     # broadcast hint: legitimate for single-event production plans
     # (track points bounded by 52 members x 481 positions — the
     # hygiene allowlist's bounded-by-construction case). broadcast=
@@ -336,7 +343,7 @@ def grid_prune_pairs(
         F.broadcast(tg) if broadcast else tg,
         (F.col("__c_latc") == F.col("__t_latc"))
         & (F.col("__c_lonc") == F.col("__t_lonc"))
-        & cond
+        & bbox
         & (F.abs(F.col("c_lat") - F.col("t_lat")) <= F.col("__box_lat"))
         & (F.abs(F.col("c_lon") - F.col("t_lon")) <= F.col("__box_lon")),
     )
@@ -364,29 +371,24 @@ def windfield_expr(
     threshold_ms: float = V_THRESHOLD_MS,
     keys: list[str] | None = None,
     metric: str = "geosphere",
-    join: str = "grid",
     broadcast: bool = True,
 ) -> DataFrame:
-    """K1 as a broadcast join + codegen expressions.
+    """K1 as a broadcast grid-cell hash join + codegen expressions.
 
     ``tracks`` must carry (ens_id, step, lat, lon, vmax, pcen, penv);
     ``centroids`` (centroid_id, lat, lon). Output: one row per
     (ens_id, step, centroid_id) with wind_ms above threshold.
     ``metric``: "geosphere" (haversine) or "equirect" — the
     reference's dist_approx switch (equirect is CLIMADA's default).
-    ``join``: "grid" (default) equi-joins on 2°-cell grid keys — each
-    track point explodes to the cells its dynamic bbox can touch
-    (2–4 per axis for typical extents; worst case 7×7 ≈ 49 copies
-    only when r_hi hits WIND_EXTENT_CAP_KM and the box reaches
-    DEG_BOX = 5.5°), each centroid hashes to exactly one cell, so the
-    bbox pruning is a
-    hash probe instead of |centroids|×|track points| nested-loop
-    condition evaluations; the exact bbox predicate remains as the
-    residual condition, so the surviving pairs are IDENTICAL to
-    ``join="nested"`` (the plain theta-join, kept for plan
-    comparison). At the production envelope (47k centroids × 25k
-    interpolated positions = 1.18e9 raw pairs) grid cuts the join from
-    ~27 s to the cost of the surviving pairs alone.
+    Pairs come from ``grid_prune_pairs`` under the Holland extent: each
+    track point explodes to the 2°-cells its dynamic bbox can touch
+    (2–4 per axis for typical extents; worst case 7×7 ≈ 49 copies only
+    when r_hi hits WIND_EXTENT_CAP_KM), each centroid hashes to exactly
+    one cell, so the bbox pruning is a hash probe instead of
+    |centroids|×|track points| nested-loop condition evaluations. At
+    the production envelope (47k centroids × 25k interpolated
+    positions = 1.18e9 raw pairs) that cuts the join from ~27 s to the
+    cost of the surviving pairs alone.
     """
     keys = keys or ["ens_id"]
     tp = track_point_params(tracks, keys=keys)
@@ -397,33 +399,12 @@ def windfield_expr(
         F.col("lon").alias("t_lon"),
         "pcen", "penv", "v_trans_ms", "rmw_km", "b_s",
     )
-    # bbox predicate INSIDE the join condition — X1 anti-cartesian
-    # guard. Written as c BETWEEN t±box (not c-t BETWEEN ±box) so the
-    # oracle SQL evaluates the bit-identical float comparison.
-    cond = (
-        F.col("c_lat").between(
-            F.col("t_lat") - DEG_BOX, F.col("t_lat") + DEG_BOX
-        )
-        & F.col("c_lon").between(
-            F.col("t_lon") - DEG_BOX, F.col("t_lon") + DEG_BOX
-        )
+    pairs = grid_prune_pairs(
+        t,
+        centroids.select("centroid_id", "lat", "lon"),
+        holland_extent_km(threshold_ms),
+        broadcast=broadcast,
     )
-    c = centroids.select(
-        "centroid_id",
-        F.col("lat").alias("c_lat"),
-        F.col("lon").alias("c_lon"),
-    )
-    if join == "grid":
-        pairs = grid_prune_pairs(
-            c, t, cond,
-            _extent_col(
-                lambda *a: _wind_extent_kernel(*a, thr=threshold_ms),
-                "rmw_km", "b_s", "penv", "pcen", "v_trans_ms", "t_lat",
-            ),
-            broadcast=broadcast,
-        )
-    else:
-        pairs = c.join(F.broadcast(t), cond)
     dist_fn = haversine_km if metric == "geosphere" else equirect_km
     r_km = dist_fn(
         F.col("c_lat"), F.col("c_lon"), F.col("t_lat"), F.col("t_lon")
@@ -432,18 +413,11 @@ def windfield_expr(
         r_km, F.col("rmw_km"), F.col("b_s"),
         F.col("penv"), F.col("pcen"), F.col("t_lat"), F.col("v_trans_ms"),
     )
-    # Same generator fence as windfield_vectors (see the long note
-    # there): without it Catalyst substitutes the threshold filter into
-    # the join condition with the full Holland tree inlined, so every
-    # raw bbox candidate pays trig/pow/exp once in the condition and
-    # again in the project. explode(array(wind)) materializes the wind
-    # exactly once per bbox-surviving pair; the join condition stays
-    # the cheap bbox comparison.
     staged = pairs.select(
         *keys,
         "step",
         "centroid_id",
-        F.explode(F.array(wind)).alias("wind_ms"),
+        F.explode(F.array(wind)).alias("wind_ms"),  # fence: grid_prune_pairs
     )
     return staged.filter(F.col("wind_ms") > threshold_ms)
 
@@ -497,10 +471,10 @@ def windfield_willoughby(
     threshold_ms: float = V_THRESHOLD_MS,
     keys: list[str] | None = None,
 ) -> DataFrame:
-    """K5 windfield: same broadcast theta-join + bbox-guard shape as
-    windfield_expr, Willoughby profile instead of Holland — the two
-    kernels are drop-in alternatives exactly as in the reference
-    (python Holland vs R Willoughby paths)."""
+    """K5 windfield: the same grid_prune_pairs join as windfield_expr
+    under the closed-form Willoughby extent, Willoughby profile instead
+    of Holland — the two kernels are drop-in alternatives exactly as in
+    the reference (python Holland vs R Willoughby paths)."""
     keys = keys or ["ens_id"]
     t = tracks.select(
         *keys,
@@ -509,31 +483,18 @@ def windfield_willoughby(
         F.col("lon").alias("t_lon"),
         "vmax",
     )
-    cond = (
-        F.col("c_lat").between(
-            F.col("t_lat") - DEG_BOX, F.col("t_lat") + DEG_BOX
-        )
-        & F.col("c_lon").between(
-            F.col("t_lon") - DEG_BOX, F.col("t_lon") + DEG_BOX
-        )
-    )
-    c = centroids.select(
-        "centroid_id",
-        F.col("lat").alias("c_lat"),
-        F.col("lon").alias("c_lon"),
-    )
     pairs = grid_prune_pairs(
-        c, t, cond, _extent_col(lambda *a: _willoughby_extent_kernel(*a, thr=threshold_ms), "vmax", "t_lat")
+        t,
+        centroids.select("centroid_id", "lat", "lon"),
+        willoughby_extent_km(F.col("vmax"), F.col("t_lat"), threshold_ms),
     )
     r_km = haversine_km(
         F.col("c_lat"), F.col("c_lon"), F.col("t_lat"), F.col("t_lon")
     )
     wind = willoughby_wind_ms(r_km, F.col("vmax"), F.col("t_lat"))
-    # generator fence: keep the profile out of the join condition
-    # (same rationale as windfield_expr)
     return pairs.select(
         *keys, "step", "centroid_id",
-        F.explode(F.array(wind)).alias("wind_ms"),
+        F.explode(F.array(wind)).alias("wind_ms"),  # fence: grid_prune_pairs
     ).filter(F.col("wind_ms") > threshold_ms)
 
 
@@ -554,7 +515,7 @@ def windfield_vectors(
     counterclockwise tangential unit vector is (−dy/r, dx/r), flipped
     in the southern hemisphere. The translational unit vector comes
     from the lead-segment kinematics (W2) in the same equirect frame.
-    Same broadcast theta-join + bbox guard as every kernel.
+    Pairs from grid_prune_pairs under the Holland extent.
     """
     keys = keys or ["ens_id"]
     km_deg = 111.12
@@ -581,25 +542,14 @@ def windfield_vectors(
         F.when(seg_len > 0.0, seg_dx / seg_len).otherwise(F.lit(0.0)).alias("hx"),
         F.when(seg_len > 0.0, seg_dy / seg_len).otherwise(F.lit(0.0)).alias("hy"),
     )
-    cond = (
-        F.col("c_lat").between(F.col("t_lat") - DEG_BOX, F.col("t_lat") + DEG_BOX)
-        & F.col("c_lon").between(F.col("t_lon") - DEG_BOX, F.col("t_lon") + DEG_BOX)
-    )
-    c = centroids.select(
-        "centroid_id",
-        F.col("lat").alias("c_lat"),
-        F.col("lon").alias("c_lon"),
-    )
     # |u,v| ≤ v_g + min(1, rmw/r)·vt — the scalar profile the Holland
     # extent kernel bisects — so the per-point prune box is
     # conservative for the vector magnitude too (triangle inequality).
     pairs = (
         grid_prune_pairs(
-            c, t, cond,
-            _extent_col(
-                lambda *a: _wind_extent_kernel(*a, thr=threshold_ms),
-                "rmw_km", "b_s", "penv", "pcen", "v_trans_ms", "t_lat",
-            ),
+            t,
+            centroids.select("centroid_id", "lat", "lon"),
+            holland_extent_km(threshold_ms),
         )
         .withColumn(
             "dx",
@@ -627,17 +577,9 @@ def windfield_vectors(
     atten = F.least(
         F.lit(1.0), F.col("rmw_km") / F.col("r_km")
     ) * F.col("v_trans_ms")
-    # Generate barrier around the expensive physics: Catalyst rewrites
-    # filters through deterministic projects by alias substitution and
-    # re-derives them below via constraint propagation, so without a
-    # barrier the speed threshold lands in the nested-loop JOIN
-    # CONDITION with the full Holland tree inlined ≈8× and evaluated
-    # per candidate pair without common-subexpression elimination —
-    # measured 34 s vs 4 s on this pair space. explode(array(v_g)) is a
-    # row-preserving generator Catalyst cannot substitute through: the
-    # gradient wind is computed exactly once per pair, and everything
-    # above (u/v/speed, the threshold, quantization) is cheap
-    # arithmetic over the materialized column.
+    # fence (grid_prune_pairs): the gradient wind is computed exactly
+    # once per pair; everything above it (u/v/speed, the threshold) is
+    # cheap arithmetic over the materialized column
     staged = pairs.select(
         *keys, "step", "centroid_id", "dx", "dy", "r_km",
         "t_lat", "rmw_km", "v_trans_ms", "hx", "hy",
@@ -731,10 +673,11 @@ def windfield_willoughby_blend(
     threshold_ms: float = V_THRESHOLD_MS,
     keys: list[str] | None = None,
 ) -> DataFrame:
-    """K5 at full W2006 fidelity. Same broadcast theta-join + bbox
-    guard as the other kernels; the per-POINT Newton solve runs on the
-    tiny track side before the join, so the pair space sees only the
-    precomputed (rmax, x1, nn, aa, r1, bw) scalars."""
+    """K5 at full W2006 fidelity. The per-POINT Newton solve runs on
+    the tiny track side before the join, so the pair space sees only
+    the precomputed (rmax, x1, nn, aa, r1, bw) scalars. The blend has
+    no extent bound: grid_prune_pairs gets WIND_EXTENT_CAP_KM, i.e.
+    exactly the ±DEG_BOX box, as a grid-cell hash join."""
     keys = keys or ["ens_id"]
     wp = (
         tracks.select(*keys, "step", "lat", "lon", "vmax")
@@ -755,16 +698,11 @@ def windfield_willoughby_blend(
         F.col("lat").alias("t_lat"), F.col("lon").alias("t_lon"),
         "vmax", "rmax", "x1", "nn", "aa", "bw", "r1",
     )
-    cond = (
-        F.col("c_lat").between(F.col("t_lat") - DEG_BOX, F.col("t_lat") + DEG_BOX)
-        & F.col("c_lon").between(F.col("t_lon") - DEG_BOX, F.col("t_lon") + DEG_BOX)
-    )
-    c = centroids.select(
-        "centroid_id",
-        F.col("lat").alias("c_lat"),
-        F.col("lon").alias("c_lon"),
-    )
-    pairs = c.join(F.broadcast(t), cond).withColumn(
+    pairs = grid_prune_pairs(
+        t,
+        centroids.select("centroid_id", "lat", "lon"),
+        F.lit(WIND_EXTENT_CAP_KM),
+    ).withColumn(
         "r",
         F.greatest(
             haversine_km(
@@ -777,10 +715,11 @@ def windfield_willoughby_blend(
         pairs.withColumn("vi", F.expr(WILL_VI_SQL))
         .withColumn("vo", F.expr(WILL_VO_SQL))
         .withColumn("xir", F.expr(WILL_XIR_SQL))
-        .withColumn("wind_ms", F.expr(WILL_BLEND_SQL))
     )
     return scored.select(
-        *keys, "step", "centroid_id", "wind_ms"
+        *keys, "step", "centroid_id",
+        # fence: grid_prune_pairs
+        F.explode(F.array(F.expr(WILL_BLEND_SQL))).alias("wind_ms"),
     ).filter(F.col("wind_ms") > threshold_ms)
 
 

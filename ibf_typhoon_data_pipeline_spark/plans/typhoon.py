@@ -1093,7 +1093,8 @@ def _willoughby_blend_oracle() -> str:
 @register(
     "tc_windfield_willoughby_blend",
     _willoughby_blend_oracle(),
-    doc="K5 at full Willoughby et al. (2006) fidelity: 9th-order "
+    doc="K5 at full Willoughby et al. (2006) fidelity on the grid-cell "
+        "hash pair join (full 5.5-degree box): 9th-order "
         "smoothstep ramp between inner power law and outer "
         "dual-exponential, ramp offset from the smoothness condition "
         "solved by 8 unrolled clamped Newton steps "
@@ -1475,36 +1476,35 @@ def gen_tracks_multi(spark: SparkSession) -> DataFrame:
            count(*) AS n_members
     FROM totals GROUP BY event_id
     """,
-    doc="§3.3 hindcast replay: E historical events through the same "
+    doc="§3.3 hindcast replay on the grid-pruned windfield pair join: "
+        "E historical events through the same "
         "windfield→hazard→trigger chain in ONE plan, grouped by "
         "event_id — the per-event loop of the hindcast notebook "
         "becomes a partition axis (simplified Willoughby outer "
-        "profile, A=0); at 100 TB event_id is the natural partition "
-        "key for archived forecast replays",
+        "profile, A=0, pruned by the closed-form Willoughby extent); "
+        "at 100 TB event_id is the natural partition key for archived "
+        "forecast replays",
 )
 def tc_hindcast_triggers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tracks = gen_tracks_multi(spark)
-    cents = gen_centroids(spark)
-    t = tracks.select(
+    from ibf_typhoon_data_pipeline_spark.functions.geo import haversine_km
+    from ibf_typhoon_data_pipeline_spark.operators.windfield import (
+        grid_prune_pairs,
+        willoughby_extent_km,
+    )
+
+    t = gen_tracks_multi(spark).select(
         "event_id",
         "ens_id",
         F.col("lat").alias("t_lat"),
         F.col("lon").alias("t_lon"),
         "vmax",
     )
-    c = cents.select(
-        "centroid_id",
-        "adm3_pcode",
-        F.col("lat").alias("c_lat"),
-        F.col("lon").alias("c_lon"),
+    # the closed-form extent bounds the A = 0 outer profile below too
+    pairs = grid_prune_pairs(
+        t,
+        gen_centroids(spark).select("centroid_id", "adm3_pcode", "lat", "lon"),
+        willoughby_extent_km(F.col("vmax"), F.col("t_lat"), 17.5),
     )
-    cond = (
-        F.col("c_lat").between(F.col("t_lat") - 5.5, F.col("t_lat") + 5.5)
-        & F.col("c_lon").between(F.col("t_lon") - 5.5, F.col("t_lon") + 5.5)
-    )
-    from ibf_typhoon_data_pipeline_spark.functions.geo import haversine_km
-
-    pairs = c.join(F.broadcast(t), cond)
     r = F.greatest(
         haversine_km(
             F.col("t_lat"), F.col("t_lon"), F.col("c_lat"), F.col("c_lon")
@@ -1519,7 +1519,8 @@ def tc_hindcast_triggers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vmax") * F.exp((rmax - r) / x1)
     )
     wf = pairs.select(
-        "event_id", "ens_id", "adm3_pcode", wind.alias("wind_ms")
+        "event_id", "ens_id", "adm3_pcode",
+        F.explode(F.array(wind)).alias("wind_ms"),  # fence: grid_prune_pairs
     ).filter(F.col("wind_ms") > 17.5)
     hazard = wf.groupBy("event_id", "ens_id", "adm3_pcode").agg(
         F.max("wind_ms").alias("v_max")
@@ -3826,20 +3827,16 @@ def tc_windfield_asymmetric(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tcspd * cos(radians(tcdir)) AS tcspd_u",
         "tcspd * sin(radians(tcdir)) AS tcspd_v",
     )
-    # grid-prune like every other windfield entry: the extent kernel
-    # runs on the GRADIENT-level vmax at a 10 m/s threshold, safely
-    # below any asymmetric crossing of the 17.5 m/s output filter
-    # (the forward-speed addition is bounded by 0.5 * tcspd, and the
-    # synthetic translation tops out ~3 m/s — 17.5 - 0.5*tcspd stays
-    # far above 10). Pruning is Spark-side only: the plain-bbox
-    # oracle is value-identical because only sub-threshold pairs are
-    # dropped. The final wind expression sits behind a generator
-    # fence so the 17.5 filter can't alias-substitute the whole trig
-    # chain into the join condition.
+    # the Willoughby extent runs on the GRADIENT-level vmax at a 10 m/s
+    # threshold, safely below any asymmetric crossing of the 17.5 m/s
+    # output filter (the forward-speed addition is bounded by 0.5 *
+    # tcspd, and the synthetic translation tops out ~3 m/s — 17.5 -
+    # 0.5*tcspd stays far above 10). Pruning is Spark-side only: the
+    # plain-bbox oracle is value-identical because only sub-threshold
+    # pairs are dropped.
     from ibf_typhoon_data_pipeline_spark.operators.windfield import (
-        _extent_col,
-        _willoughby_extent_kernel,
         grid_prune_pairs,
+        willoughby_extent_km,
     )
 
     t = motion.selectExpr(
@@ -3847,28 +3844,10 @@ def tc_windfield_asymmetric(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vmax_gl AS vmax", "rmax", "x1", "nn", "aa",
         "tcspd_u", "tcspd_v",
     )
-    c = gen_centroids(spark).select(
-        "centroid_id",
-        F.col("lat").alias("c_lat"),
-        F.col("lon").alias("c_lon"),
-    )
-    cond = (
-        F.col("c_lat").between(
-            F.col("t_lat") - 5.5, F.col("t_lat") + 5.5
-        )
-        & F.col("c_lon").between(
-            F.col("t_lon") - 5.5, F.col("t_lon") + 5.5
-        )
-    )
     pruned = grid_prune_pairs(
-        c,
         t,
-        cond,
-        _extent_col(
-            lambda *a: _willoughby_extent_kernel(*a, thr=10.0),
-            "vmax",
-            "t_lat",
-        ),
+        gen_centroids(spark).select("centroid_id", "lat", "lon"),
+        willoughby_extent_km(F.col("vmax"), F.col("t_lat"), 10.0),
     )
     pairs = pruned.selectExpr(
         "ens_id", "centroid_id", "vmax", "rmax", "x1", "nn", "aa",
@@ -3886,6 +3865,7 @@ def tc_windfield_asymmetric(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "ens_id",
             "centroid_id",
+            # fence: grid_prune_pairs
             F.explode(F.array(F.expr(_ASym_WIND_SQL))).alias("wind_sfc"),
         )
     )

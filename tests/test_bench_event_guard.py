@@ -4,8 +4,9 @@ The guard pins the RATIO envelope/probe instead of absolute seconds,
 so sandbox CPU weather cancels. These tests prove the mechanism:
 
 1. pure-function contract of `ratio_warning`;
-2. on a mini production envelope, bypassing `grid_prune_pairs`
-   (``join="nested"``) inflates the in-session ratio past the 1.5×
+2. on a mini production envelope, bypassing `grid_prune_pairs` (the
+   plain ±DEG_BOX broadcast theta-join monkeypatched in its place)
+   inflates the in-session ratio past the 1.5×
    factor — i.e. the guard fires on a REAL pruning regression while
    staying quiet on the shipped plan, measured in the same JVM so
    machine drift cannot explain the gap.
@@ -18,7 +19,9 @@ from pyspark.sql import functions as F
 from ibf_typhoon_data_pipeline_spark.operators.bench_probe import (
     ratio_warning,
 )
+from ibf_typhoon_data_pipeline_spark.operators import windfield
 from ibf_typhoon_data_pipeline_spark.operators.windfield import (
+    DEG_BOX,
     windfield_expr,
 )
 from ibf_typhoon_data_pipeline_spark.plans.typhoon import gen_tracks
@@ -72,14 +75,30 @@ def _track_points(spark):
     return interp
 
 
-def _envelope(spark, tracks, cents, join: str) -> tuple[float, int]:
+def _nested_pairs(t, centroids, r_hi, broadcast=True):
+    """The pruning bypass: the plain ±DEG_BOX broadcast theta-join
+    (BroadcastNestedLoopJoin) in place of grid_prune_pairs."""
+    c = centroids.select(
+        "centroid_id", F.col("lat").alias("c_lat"), F.col("lon").alias("c_lon")
+    )
+    return c.join(
+        F.broadcast(t),
+        F.col("c_lat").between(F.col("t_lat") - DEG_BOX, F.col("t_lat") + DEG_BOX)
+        & F.col("c_lon").between(F.col("t_lon") - DEG_BOX, F.col("t_lon") + DEG_BOX),
+    )
+
+
+def _envelope(monkeypatch, tracks, cents, join: str) -> tuple[float, int]:
     # threshold 50 m/s: the shared survivor work (Holland on passing
     # pairs) shrinks and the dynamic prune radius tightens, so the
     # timing gap isolates exactly what the guard watches — the raw
     # candidate-pair scan the grid join prunes and the nested loop
     # pays in full (measured 2.0 s grid vs 15.4 s nested at this
     # config; outputs identical).
-    wf = windfield_expr(tracks, cents, threshold_ms=50.0, join=join)
+    with monkeypatch.context() as m:
+        if join == "nested":
+            m.setattr(windfield, "grid_prune_pairs", _nested_pairs)
+        wf = windfield_expr(tracks, cents, threshold_ms=50.0)
     t0 = time.perf_counter()
     n = wf.groupBy("ens_id", "centroid_id").agg(
         F.max("wind_ms").alias("i")
@@ -87,7 +106,7 @@ def _envelope(spark, tracks, cents, join: str) -> tuple[float, int]:
     return time.perf_counter() - t0, n
 
 
-def test_guard_fires_on_pruning_bypass(spark):
+def test_guard_fires_on_pruning_bypass(spark, monkeypatch):
     # production 0.05-degree grid x 30-min resampled track: the full
     # 1.18e9 raw-pair envelope bench_event guards
     cents = spark.range(261 * 181).select(
@@ -100,9 +119,9 @@ def test_guard_fires_on_pruning_bypass(spark):
     # spin-up doesn't bias either timed leg
     mini = cents.filter(F.col("centroid_id") % 64 == 0)
     for j in ("grid", "nested"):
-        _envelope(spark, tracks, mini, j)
-    grid_s, n_grid = _envelope(spark, tracks, cents, "grid")
-    nested_s, n_nested = _envelope(spark, tracks, cents, "nested")
+        _envelope(monkeypatch, tracks, mini, j)
+    grid_s, n_grid = _envelope(monkeypatch, tracks, cents, "grid")
+    nested_s, n_nested = _envelope(monkeypatch, tracks, cents, "nested")
     # the prune must never change the answer
     assert n_grid == n_nested
     # the grid leg IS the in-session probe: pin_ratio=1.0 says "the

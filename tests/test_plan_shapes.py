@@ -5,6 +5,8 @@ scale."""
 
 from __future__ import annotations
 
+import pytest
+
 from ibf_typhoon_data_pipeline_spark import plans
 
 
@@ -181,10 +183,12 @@ def test_ivf_cell_key_is_fenced_and_probe_stays_round_robin(spark):
 
 def test_willoughby_blend_solve_stays_on_track_side(spark):
     plan = _plan(spark, "tc_windfield_willoughby_blend")
-    # pair space via broadcast theta-join under the bbox guard, never
-    # a cartesian; the Newton solve ran on the broadcast (track) side
-    assert "BroadcastNestedLoopJoin" in plan
+    # pair space via the grid-cell hash join under the bbox guard,
+    # never a cartesian; the Newton solve runs only on the broadcast
+    # (track) side, below the exchange
+    assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
+    assert plan.index("BroadcastExchange") < plan.index("pow(xi#")
 
 
 def test_sessionize_reuses_one_sort_for_both_windows(spark):
@@ -628,19 +632,30 @@ def test_j11_tier1_probes_cells_not_full_cross(spark):
     assert "Window" not in plan
 
 
-def test_asymmetric_windfield_rides_grid_prune(spark):
-    # the first cut of this entry used the plain 5.5-degree bbox
-    # theta-join (BroadcastNestedLoopJoin over every track x centroid
-    # pair) and measured 95 s at sf0.1; the grid-cell hash join +
-    # extent prune + generator fence is 0.6 s at identical values.
-    # Pin the shape.
-    plan = _plan(spark, "tc_windfield_asymmetric")
+@pytest.mark.parametrize("name", [
+    "tc_windfield_holland",
+    "tc_windfield_equirect",
+    "tc_windfield_willoughby",
+    "tc_windfield_vectors",
+    "tc_windfield_willoughby_blend",
+    "tc_windfield_asymmetric",
+    "tc_hindcast_triggers",
+    "tc_wind_arrival_time",
+    "tc_wind_duration",
+    "tc_ike_energy",
+])
+def test_windfield_rides_grid_prune(spark, name):
+    # every Column-expression windfield entry takes its pairs from
+    # operators/windfield.grid_prune_pairs: a grid-cell HASH join, never
+    # the plain 5.5-degree bbox theta-join (BroadcastNestedLoopJoin over
+    # every track x centroid pair — the asymmetric entry's first cut
+    # measured 95 s vs 0.6 s at sf0.1, the blend 12.3 s vs 2.1 s at
+    # sf0.01), and a generator fence so the threshold filter can't
+    # alias-substitute the profile into the join condition
+    plan = _plan(spark, name)
     assert "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
-    # generator fence: the asymmetric wind column comes out of an
-    # explode, so the 17.5 filter can't alias-substitute the trig
-    # chain into the join condition
     assert "Generate explode" in plan
 
 

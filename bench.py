@@ -228,7 +228,10 @@ def session(app: str, sf_dir: str):
     of every table family, and the Arrow/Python worker pool — the
     first pandas-UDF stage of a session pays worker spin-up (~1-2 s)
     that a long-lived cluster never sees per-query; one trivial batch
-    absorbs it."""
+    absorbs it. The forecast chain itself runs no Python (the Holland
+    prune radius is a JVM expression); the pool is for the entries
+    that still do, such as ``tc_windfield_kernel`` and
+    ``tc_track_spline``."""
     from pyspark.sql import functions as F
     from pyspark.sql.pandas.functions import pandas_udf
 

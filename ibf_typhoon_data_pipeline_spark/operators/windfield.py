@@ -34,7 +34,8 @@ per-point wind extent|. ``grid_prune_pairs`` equi-joins on 2°-cell
 keys (track points exploded to the cells their prune box touches,
 each centroid hashed to one cell) with the exact bbox AND a per-point
 dynamic box — from a conservative threshold-crossing radius of the
-profile: bisected for Holland, closed-form for Willoughby — as the
+profile: bisected for Holland (one JVM ``aggregate`` over the track
+side, no Python worker), closed-form for Willoughby — as the
 residual condition, so pruning is a hash probe and the profile runs
 only near the storm; track sides are tiny (52 members × ~40-480
 points, ≤ a few cell copies each) and always broadcast. Output is the
@@ -171,54 +172,50 @@ WIND_EXTENT_CAP_KM = 871.0
 # can only INFLATE the prune box, never shrink it below the true extent
 KM_PER_DEG_LB = 111.0
 GRID_CELL_DEG = 2.0     # edge of the hash-join grid cells
+EXTENT_BISECT_STEPS = 40  # halvings of the Holland extent bisection
 
 
-def _wind_extent_kernel(rmw, b_s, penv, pcen, vt, lat, thr=V_THRESHOLD_MS):
-    """``_holland_np`` bisected for the radius where the profile
-    crosses ``thr``. v_total is monotone decreasing beyond rmw (dv_g/dr
-    = a'/(2s) + c'(c/s − 1) with a' ≤ 0, c ≤ s, and the attenuated
-    translation term decreasing too), so every r > r_hi is strictly
-    below threshold and pruning those pairs cannot change the output.
-    The +2 km margin dwarfs any numpy↔JVM libm ulp disagreement near
-    the crossing."""
-    import numpy as np
+def holland_extent_km(threshold_ms: float | Column) -> Column:
+    """Per-track-point prune radius of the Holland profile: the radius
+    where ``holland_wind_ms`` crosses ``threshold_ms``, bisected
+    between rmw and the cap in EXTENT_BISECT_STEPS halvings of one
+    ``aggregate(sequence(1, n), struct(lo, hi), …)`` — a JVM
+    expression over the track frame's (rmw_km, b_s, penv, pcen,
+    v_trans_ms, t_lat) attributes. v_total is monotone decreasing
+    beyond rmw (dv_g/dr = a'/(2s) + c'(c/s − 1) with a' ≤ 0, c ≤ s, and
+    the attenuated translation term decreasing too), so every r > r_hi
+    is strictly below threshold and pruning those pairs cannot change
+    the output. A peak at or below the threshold gives 0; a profile
+    still above it at the cap gives the cap. The +2 km margin dwarfs
+    any ulp disagreement near the crossing. Applied only to
+    broadcast-sized track frames: the interpreted lambda runs
+    n times per track point, never per pair."""
 
-    def v_total(r):
-        return _holland_np(r, rmw, b_s, penv, pcen, lat, vt)
-
-    lo = rmw.astype("float64").copy()
-    hi = np.full(len(rmw), WIND_EXTENT_CAP_KM)
-    peak = v_total(lo)
-    far = v_total(hi)
-    for _ in range(40):
-        mid = 0.5 * (lo + hi)
-        above = v_total(mid) > thr
-        lo = np.where(above, mid, lo)
-        hi = np.where(above, hi, mid)
-    r_hi = np.where(
-        peak <= thr,
-        0.0,
-        np.where(far > thr, WIND_EXTENT_CAP_KM, hi),
-    )
-    return r_hi + 2.0
-
-
-def holland_extent_km(threshold_ms: float) -> Column:
-    """Per-track-point prune radius of the Holland profile: the
-    bisection above as an Arrow-batched column over the track frame's
-    (rmw_km, b_s, penv, pcen, v_trans_ms, t_lat). Applied only to
-    broadcast-sized track frames."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _extent(*series):
-        import pandas as pd
-
-        return pd.Series(
-            _wind_extent_kernel(*[s.to_numpy() for s in series], thr=threshold_ms)
+    def v_total(r: Column) -> Column:
+        return holland_wind_ms(
+            r, F.col("rmw_km"), F.col("b_s"), F.col("penv"), F.col("pcen"),
+            F.col("t_lat"), F.col("v_trans_ms"),
         )
 
-    return _extent("rmw_km", "b_s", "penv", "pcen", "v_trans_ms", "t_lat")
+    def halve(acc: Column, _step: Column) -> Column:
+        mid = 0.5 * (acc["lo"] + acc["hi"])
+        return F.when(
+            v_total(mid) > threshold_ms,
+            F.struct(mid.alias("lo"), acc["hi"].alias("hi")),
+        ).otherwise(F.struct(acc["lo"].alias("lo"), mid.alias("hi")))
+
+    cap = F.lit(WIND_EXTENT_CAP_KM)
+    hi = F.aggregate(
+        F.sequence(F.lit(1), F.lit(EXTENT_BISECT_STEPS)),
+        F.struct(F.col("rmw_km").alias("lo"), cap.alias("hi")),
+        halve,
+    )["hi"]
+    return (
+        F.when(v_total(F.col("rmw_km")) <= threshold_ms, F.lit(0.0))
+        .when(v_total(cap) > threshold_ms, cap)
+        .otherwise(hi)
+        + 2.0
+    )
 
 
 def willoughby_extent_km(vmax: Column, lat: Column, thr: float | Column) -> Column:
@@ -542,8 +539,8 @@ def windfield_vectors(
         F.when(seg_len > 0.0, seg_dx / seg_len).otherwise(F.lit(0.0)).alias("hx"),
         F.when(seg_len > 0.0, seg_dy / seg_len).otherwise(F.lit(0.0)).alias("hy"),
     )
-    # |u,v| ≤ v_g + min(1, rmw/r)·vt — the scalar profile the Holland
-    # extent kernel bisects — so the per-point prune box is
+    # |u,v| ≤ v_g + min(1, rmw/r)·vt — the scalar profile
+    # holland_extent_km bisects — so the per-point prune box is
     # conservative for the vector magnitude too (triangle inequality).
     pairs = (
         grid_prune_pairs(

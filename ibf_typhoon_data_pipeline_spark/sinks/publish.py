@@ -30,6 +30,7 @@ import time
 import urllib.error
 import urllib.parse
 import urllib.request
+from collections.abc import Iterable
 from dataclasses import dataclass
 from pathlib import Path
 
@@ -56,6 +57,12 @@ NO_EVENT_INDICATORS = (
     "houses_affected",
     "forecast_severity",
     "forecast_trigger",
+)
+# the canned trigger scenario the mock-event replay posts: the
+# (dynamicIndicator, body_json) rows of pipeline_publish on the
+# generated storm (write_trigger_scenario regenerates it)
+TRIGGER_SCENARIO = (
+    Path(__file__).resolve().parent.parent / "data" / "mock" / "trigger_scenario.json"
 )
 
 
@@ -156,32 +163,44 @@ class IbfApiClient:
 
 
 def publish_exposure_frames(
-    payloads: DataFrame,
+    payloads: Iterable,
     client: IbfApiClient,
     upload_time: str,
     lead_time: str | None = None,
 ) -> list[str]:
     """Post each assembled exposure document (one row per indicator,
-    columns dynamicIndicator + body_json — the pipeline_publish plan)
-    to admin-area-dynamic-data/exposure, stamping the upload date the
-    way uploadTyphoonData does (dynamicDataDb.py:72-84). Read timeouts
-    skip the indicator and continue (reference behavior). Returns the
-    indicators actually posted."""
+    fields dynamicIndicator + body_json — the pipeline_publish plan's
+    collected rows, or the canned scenario's) to
+    admin-area-dynamic-data/exposure, stamping the upload date the
+    way uploadTyphoonData does (dynamicDataDb.py:72-84). Every body is
+    parsed before the first POST: a NULL or unparsable body, or one
+    without an exposurePlaceCodes list, raises ValueError naming the
+    indicator and nothing is posted. Read timeouts skip the indicator
+    and continue (reference behavior). Returns the indicators actually
+    posted."""
+    bodies = []
+    for row in payloads:
+        layer = row["dynamicIndicator"]
+        try:
+            body = json.loads(row["body_json"])
+        except (TypeError, ValueError) as exc:
+            raise ValueError(f"malformed body for indicator {layer}") from exc
+        if not isinstance(body, dict) or not isinstance(
+            body.get("exposurePlaceCodes"), list
+        ):
+            raise ValueError(f"no exposurePlaceCodes list for indicator {layer}")
+        bodies.append((layer, body))
     posted: list[str] = []
-    for row in payloads.collect():  # municipality-sized by design
-        body = json.loads(row["body_json"])
+    for layer, body in bodies:
         body["date"] = upload_time
         if lead_time is not None:  # the after-landfall override (:85-97)
             body["leadTime"] = lead_time
         try:
             client.post("admin-area-dynamic-data/exposure", body)
         except TimeoutError:
-            logger.info(
-                "time out during Uploading data for indicator: %s",
-                row["dynamicIndicator"],
-            )
+            logger.info("time out during Uploading data for indicator: %s", layer)
             continue
-        posted.append(row["dynamicIndicator"])
+        posted.append(layer)
     return posted
 
 
@@ -239,6 +258,34 @@ def upload_to_blob(
     return str(dest)
 
 
+def mock_scenario(trigger: bool = True) -> list[dict]:
+    """The canned S12 scenario (settings.py:48-53): the trigger
+    scenario is TRIGGER_SCENARIO as committed; the non-trigger one
+    keeps the no-event indicators with empty exposurePlaceCodes and a
+    null eventName (uploadTyphoonData_no_event)."""
+    rows = json.loads(TRIGGER_SCENARIO.read_text())
+    if trigger:
+        return rows
+    out = []
+    for row in rows:
+        if row["dynamicIndicator"] in NO_EVENT_INDICATORS:
+            body = json.loads(row["body_json"])
+            body["exposurePlaceCodes"] = []
+            body["eventName"] = None
+            out.append({**row, "body_json": json.dumps(body)})
+    return out
+
+
+def write_trigger_scenario(spark) -> None:
+    """Regenerate TRIGGER_SCENARIO: the publish payloads of the forecast
+    chain on the generated storm (the pipeline_publish entry)."""
+    from ibf_typhoon_data_pipeline_spark.pipeline import publish_payloads
+    from ibf_typhoon_data_pipeline_spark.plans.typhoon import _damage
+
+    rows = [r.asDict() for r in publish_payloads(_damage(spark)).collect()]
+    TRIGGER_SCENARIO.write_text(json.dumps(rows, indent=1) + "\n")
+
+
 def replay_mock_event(
     spark,
     sf_dir: str,
@@ -247,32 +294,10 @@ def replay_mock_event(
     trigger: bool = True,
 ) -> list[str]:
     """S12 — the mock-event replay (pipeline.py:81-91, settings.py:
-    48-51): instead of fetching live forecasts, push a canned scenario
-    through the real publish path. The trigger scenario posts the full
-    indicator set from the assembled payload frame; the non-trigger
-    scenario posts the no-event subset with zeroed documents
-    (uploadTyphoonData_no_event), then events/process closes out. The
-    canned scenario is the forecast chain on the generated storm;
-    ``sf_dir`` is not read."""
-    from ibf_typhoon_data_pipeline_spark.pipeline import publish_payloads
-    from ibf_typhoon_data_pipeline_spark.plans.typhoon import _damage
-
-    payloads = publish_payloads(_damage(spark))
-    if not trigger:
-        from pyspark.sql import functions as F
-
-        payloads = payloads.filter(
-            F.col("dynamicIndicator").isin(list(NO_EVENT_INDICATORS))
-        ).select(
-            "dynamicIndicator",
-            F.regexp_replace(
-                F.regexp_replace(
-                    "body_json", r'"exposurePlaceCodes":\[[^\]]*\]',
-                    '"exposurePlaceCodes":[]'
-                ),
-                r'"eventName":"[^"]*"', '"eventName":null'
-            ).alias("body_json"),
-        )
-    posted = publish_exposure_frames(payloads, client, upload_time)
+    48-51): instead of running a forecast, push the canned scenario
+    (``mock_scenario``) through the real publish path, then
+    events/process closes out. Runs no Spark job; ``spark`` and
+    ``sf_dir`` are not read."""
+    posted = publish_exposure_frames(mock_scenario(trigger), client, upload_time)
     process_events(client, upload_time)
     return posted

@@ -191,6 +191,53 @@ def test_willoughby_blend_solve_stays_on_track_side(spark):
     assert plan.index("BroadcastExchange") < plan.index("pow(xi#")
 
 
+PYTHON_EVAL_NODES = ("ArrowEvalPython", "BatchEvalPython", "PythonUDF")
+
+
+def test_forecast_chain_runs_no_python(spark):
+    # the chain evaluates in the JVM end to end: no Python worker is
+    # started by a forecast cycle (the Holland prune radius used to be
+    # the chain's one pandas UDF)
+    from dataclasses import fields
+
+    from ibf_typhoon_data_pipeline_spark.pipeline import run_forecast_pipeline
+
+    executed = {
+        name: _plan(spark, name)
+        for name in (
+            "tc_windfield_holland", "tc_windfield_vectors",
+            "tc_muni_hazard", "pipeline_publish",
+        )
+    }
+    res = run_forecast_pipeline(spark)
+    for f in fields(res):
+        df = getattr(res, f.name)
+        executed[f.name] = df._jdf.queryExecution().executedPlan().toString()
+    res.unpersist()
+    for name, plan in executed.items():
+        for node in PYTHON_EVAL_NODES:
+            assert node not in plan, (name, node)
+    # the cached layers' plans are printed in full, so the persisted
+    # windfield really carries its extent
+    assert "InMemoryRelation" in executed["windfield"]
+    assert "aggregate(" in executed["windfield"]
+
+
+def test_holland_extent_stays_on_track_side(spark):
+    plan = _plan(spark, "tc_windfield_holland")
+    # the bisection runs once per track point, below the exchange that
+    # broadcasts the track side — never per pair...
+    assert plan.count("aggregate(") == 1
+    assert plan.index("BroadcastExchange") < plan.index("aggregate(")
+    # ...and its lambda reads the track columns as attributes: no
+    # window expression or rmw lookup inlined into it
+    bisect = plan.split("aggregate(", 1)[1].split("\n", 1)[0]
+    for col in ("rmw_km#", "b_s#", "pcen#", "t_lat#", "v_trans_ms#"):
+        assert col in bisect, col
+    assert "_we" not in bisect
+    assert "CASE WHEN (pcen" not in bisect
+
+
 def test_sessionize_reuses_one_sort_for_both_windows(spark):
     plan = _plan(spark, "events_sessionize")
     # lag-flag window and running-sum window share the (user_id, ts,

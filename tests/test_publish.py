@@ -14,7 +14,9 @@ import pytest
 from ibf_typhoon_data_pipeline_spark.sinks.publish import (
     EXPOSURE_INDICATORS,
     NO_EVENT_INDICATORS,
+    TRIGGER_SCENARIO,
     IbfApiClient,
+    mock_scenario,
     process_events,
     publish_exposure_frames,
     replay_mock_event,
@@ -126,7 +128,7 @@ def test_publish_exposure_frames_stamps_date(spark, stub_server):
 
     payloads = QUERIES["pipeline_publish"].fn(spark, SF)
     posted = publish_exposure_frames(
-        payloads, _client(stub_server), upload_time="2024-06-01T00:00:00Z"
+        payloads.collect(), _client(stub_server), upload_time="2024-06-01T00:00:00Z"
     )
     assert sorted(posted) == sorted(
         layer for layer in EXPOSURE_INDICATORS if layer != "rainfall"
@@ -142,6 +144,39 @@ def test_publish_exposure_frames_stamps_date(spark, stub_server):
         assert set(entry) == {"placeCode", "amount"}
 
 
+@pytest.mark.parametrize("bad", [
+    None,
+    '{"countryCodeISO3":"PHL","exposurePlaceCodes":[',
+    '{"countryCodeISO3":"PHL"}',
+    '[]',
+])
+def test_malformed_body_posts_nothing(stub_server, bad):
+    # every body is checked before the first POST: the earlier, valid
+    # indicators must not reach the portal either
+    rows = mock_scenario()[:2] + [
+        {"dynamicIndicator": "forecast_trigger", "body_json": bad}
+    ]
+    with pytest.raises(ValueError, match="forecast_trigger"):
+        publish_exposure_frames(rows, _client(stub_server), "t0")
+    assert stub_server.posts == []
+    assert stub_server.logins == []
+
+
+def test_trigger_scenario_is_pipeline_publish(spark):
+    from ibf_typhoon_data_pipeline_spark.plans import QUERIES
+
+    want = [
+        {"dynamicIndicator": r.dynamicIndicator, "body_json": r.body_json}
+        for r in QUERIES["pipeline_publish"].fn(spark, SF).collect()
+    ]
+    assert mock_scenario() == want, (
+        f"{TRIGGER_SCENARIO} is stale; regenerate it with: python -c "
+        "\"from ibf_typhoon_data_pipeline_spark.session import get_spark; "
+        "from ibf_typhoon_data_pipeline_spark.sinks.publish import "
+        "write_trigger_scenario; write_trigger_scenario(get_spark('mock'))\""
+    )
+
+
 def test_process_events_notify_flag(stub_server):
     process_events(_client(stub_server), "t0", notify_email=False)
     path, body = stub_server.posts[0]
@@ -152,10 +187,16 @@ def test_process_events_notify_flag(stub_server):
 
 
 def test_mock_event_replay_trigger_and_nontrigger(spark, stub_server):
+    # the replay posts the canned scenario and starts no Spark job
+    tracker = spark.sparkContext.statusTracker()
+    jobs = set(tracker.getJobIdsForGroup())
     c = _client(stub_server)
     posted = replay_mock_event(spark, SF, c, "t1", trigger=True)
     assert len(posted) == 7  # full indicator set (rainfall layer n/a here)
     assert stub_server.posts[-1][0].startswith("/events/process")
+    assert [body for _, body in stub_server.posts[:-1]] == [
+        {**json.loads(row["body_json"]), "date": "t1"} for row in mock_scenario()
+    ]
 
     stub_server.posts.clear()
     posted = replay_mock_event(spark, SF, c, "t2", trigger=False)
@@ -163,6 +204,11 @@ def test_mock_event_replay_trigger_and_nontrigger(spark, stub_server):
     for path, body in stub_server.posts[:-1]:
         assert body["exposurePlaceCodes"] == []
         assert body["eventName"] is None
+    assert [body for _, body in stub_server.posts[:-1]] == [
+        {**json.loads(row["body_json"]), "date": "t2"}
+        for row in mock_scenario(trigger=False)
+    ]
+    assert set(tracker.getJobIdsForGroup()) == jobs
 
 
 def test_blob_filesystem_adapter(tmp_path):

@@ -111,3 +111,93 @@ def test_willoughby_extent_bounds_both_profiles(spark):
     # do cross the threshold somewhere
     assert any(r.r_hi < 0.5 * WIND_EXTENT_CAP_KM for r in rows)
     assert sum(r.a0_reach is not None for r in rows) > len(rows) // 2
+
+
+def test_holland_extent_bounds_profile(spark):
+    """The bisected Holland prune radius is conservative: past r_hi the
+    profile never exceeds the threshold — checked at r_hi and in 25 km
+    steps out to the cap, and against the largest above-threshold
+    radius of a 0.5 km scan — over a grid of pressure, latitude,
+    translation speed, b_s and threshold (one Spark job). On the
+    generated tracks the JVM bisection equals the numpy one exactly."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from ibf_typhoon_data_pipeline_spark.operators.windfield import (
+        EXTENT_BISECT_STEPS,
+        WIND_EXTENT_CAP_KM,
+        _holland_np,
+        estimate_rmw_km,
+        holland_extent_km,
+        holland_wind_ms,
+        track_point_params,
+    )
+
+    def axis(name, lo, step, n):
+        return spark.range(n).select((lo + F.col("id") * step).alias(name))
+
+    grid = (
+        axis("pcen", 900.0, 21.0, 6)
+        .crossJoin(axis("t_lat", -40.0, 16.0, 6))
+        .crossJoin(axis("v_trans_ms", 0.0, 7.7, 3))
+        .crossJoin(axis("b_s", 1.0, 0.5, 4))
+        .crossJoin(spark.createDataFrame([(10.0,), (15.0,), (17.5,)], ["thr"]))
+        .withColumn("penv", F.lit(1010.0))
+        .withColumn("rmw_km", estimate_rmw_km(F.col("pcen")))
+    )
+
+    def wind(r):
+        return holland_wind_ms(
+            r, F.col("rmw_km"), F.col("b_s"), F.col("penv"), F.col("pcen"),
+            F.col("t_lat"), F.col("v_trans_ms"),
+        )
+
+    cap = F.lit(WIND_EXTENT_CAP_KM)
+    r_hi = F.col("r_hi")
+    n_checks = F.greatest(F.floor((cap - r_hi) / 25.0), F.lit(0))
+    checks = F.transform(F.sequence(F.lit(0), n_checks), lambda j: r_hi + 25.0 * j)
+    scan = F.transform(
+        F.sequence(F.lit(0), F.lit(int(WIND_EXTENT_CAP_KM * 2))), lambda k: k * 0.5
+    )
+    rows = grid.withColumn("r_hi", holland_extent_km(F.col("thr"))).select(
+        "pcen", "t_lat", "v_trans_ms", "b_s", "thr", "r_hi",
+        wind(cap).alias("far"),
+        F.array_max(F.transform(checks, wind)).alias("check"),
+        F.array_max(F.filter(scan, lambda r: wind(r) > F.col("thr"))).alias("reach"),
+    ).collect()
+
+    assert len(rows) == 6 * 6 * 3 * 4 * 3
+    for r in rows:
+        if r.r_hi > WIND_EXTENT_CAP_KM:
+            # the cap: the profile is still above threshold there, and
+            # the prune box is the plain ±DEG_BOX box
+            assert r.far > r.thr, r
+            continue
+        assert r.check <= r.thr, r
+        assert r.reach is None or r.reach < r.r_hi, r
+    # not vacuous: the bound prunes, and the profile crosses somewhere
+    assert any(r.r_hi < 0.5 * WIND_EXTENT_CAP_KM for r in rows)
+    assert sum(r.reach is not None for r in rows) > len(rows) // 2
+
+    # the JVM bisection is the numpy one, to the bit, on the catalog storm
+    tp = track_point_params(gen_tracks(spark)).select(
+        F.col("lat").alias("t_lat"), "pcen", "penv", "v_trans_ms", "rmw_km", "b_s"
+    )
+    got = tp.withColumn("r_hi", holland_extent_km(17.5)).collect()
+    rmw, b_s, penv, pcen, vt, lat, jvm = (
+        np.array([r[c] for r in got])
+        for c in ("rmw_km", "b_s", "penv", "pcen", "v_trans_ms", "t_lat", "r_hi")
+    )
+
+    def v(r):
+        return _holland_np(r, rmw, b_s, penv, pcen, lat, vt)
+
+    lo, hi = rmw.copy(), np.full(len(rmw), WIND_EXTENT_CAP_KM)
+    for _ in range(EXTENT_BISECT_STEPS):
+        mid = 0.5 * (lo + hi)
+        above = v(mid) > 17.5
+        lo, hi = np.where(above, mid, lo), np.where(above, hi, mid)
+    far = np.where(v(np.full(len(rmw), WIND_EXTENT_CAP_KM)) > 17.5, WIND_EXTENT_CAP_KM, hi)
+    want = np.where(v(rmw) <= 17.5, 0.0, far) + 2.0
+    assert len(got) == 2132
+    assert np.abs(jvm - want).max() == 0.0
